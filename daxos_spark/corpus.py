@@ -97,7 +97,9 @@ def build_clean_corpus(
     finally:
         canon.unpersist()
 
-    back = spark.read.parquet(gold)
+    # explicit schema: when the quality gate drops every document the
+    # gold dir holds no data file, and schema inference would fail
+    back = spark.read.schema(clean.schema).parquet(gold)
     return CorpusResult(
         gold_path=gold,
         n_input=n_input,

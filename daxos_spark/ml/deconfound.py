@@ -22,7 +22,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from ..sources.tables import covar_columns
@@ -58,6 +58,27 @@ def standardize_covars(
     return out, stats
 
 
+def _design(cov_cols: list[str]) -> list[Column]:
+    """Columns of the design matrix C = [1 | covars]."""
+    return [F.lit(1.0), *[F.col(c).cast("double") for c in cov_cols]]
+
+
+def _gramian(
+    fact: DataFrame, zs: list[Column], extra: list[Column] | None = None
+) -> tuple[np.ndarray, Row]:
+    """CᵀC of the design ``zs`` — the (k+1)² upper-triangle sums in ONE
+    aggregation job, with ``extra`` aggregates riding the same pass.
+    Returns (CᵀC, the aggregate row)."""
+    n = len(zs)
+    aggs = [F.sum(zs[i] * zs[j]).alias(f"g_{i}_{j}") for i in range(n) for j in range(i, n)]
+    row = fact.agg(*aggs, *(extra or [])).collect()[0]
+    ctc = np.zeros((n, n))
+    for i in range(n):
+        for j in range(i, n):
+            ctc[i, j] = ctc[j, i] = row[f"g_{i}_{j}"]
+    return ctc, row
+
+
 def compute_beta_matrix(
     fact: DataFrame, cov_cols: list[str], features_col: str = "features"
 ) -> np.ndarray:
@@ -69,17 +90,8 @@ def compute_beta_matrix(
     fact = fact.filter(
         F.col(features_col).isNotNull() & (F.size(F.col(features_col)) > 0)
     )
-    zs = [F.lit(1.0), *[F.col(c).cast("double") for c in cov_cols]]
-
-    # CᵀC — (k+1)² tiny aggregates in one pass
-    ctc_aggs = [
-        F.sum(zs[i] * zs[j]).alias(f"g_{i}_{j}") for i in range(k + 1) for j in range(i, k + 1)
-    ]
-    g = fact.agg(*ctc_aggs).collect()[0]
-    ctc = np.zeros((k + 1, k + 1))
-    for i in range(k + 1):
-        for j in range(i, k + 1):
-            ctc[i, j] = ctc[j, i] = g[f"g_{i}_{j}"]
+    zs = _design(cov_cols)
+    ctc, _ = _gramian(fact, zs)
 
     # CᵀX — posexplode + per-position partial aggregation
     exploded = fact.select(
@@ -139,18 +151,11 @@ def residualize_features(
 
 def label_betas(fact: DataFrame, cov_cols: list[str], label_col: str = "label") -> np.ndarray:
     """M2 linear label-deconfound betas (deconfound.py:54-62), closed
-    form on the same CᵀC with Cᵀy."""
-    k = len(cov_cols)
-    zs = [F.lit(1.0), *[F.col(c).cast("double") for c in cov_cols]]
-    aggs = [
-        F.sum(zs[i] * zs[j]).alias(f"g_{i}_{j}") for i in range(k + 1) for j in range(i, k + 1)
-    ] + [F.sum(zs[i] * F.col(label_col).cast("double")).alias(f"y{i}") for i in range(k + 1)]
-    row = fact.agg(*aggs).collect()[0]
-    ctc = np.zeros((k + 1, k + 1))
-    for i in range(k + 1):
-        for j in range(i, k + 1):
-            ctc[i, j] = ctc[j, i] = row[f"g_{i}_{j}"]
-    cty = np.array([row[f"y{i}"] for i in range(k + 1)])
+    form on the same CᵀC with Cᵀy (one aggregation job)."""
+    zs = _design(cov_cols)
+    y = F.col(label_col).cast("double")
+    ctc, row = _gramian(fact, zs, [F.sum(z * y).alias(f"y{i}") for i, z in enumerate(zs)])
+    cty = np.array([row[f"y{i}"] for i in range(len(zs))])
     return np.linalg.solve(ctc, cty)
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables
 from ..ml.scoring import score_auc
 from ..ml.train import GBTParams, fit_gbt, predict_gbt
-from .registry import ALL_SPECS, QuerySpec, checkpoint_release, register
+from .registry import QuerySpec, cache, checkpoint_release, register
 
 
 def _q(name: str, doc: str = ""):
@@ -56,7 +56,7 @@ def _binary_embeddings(
 
 @_q("ml_gbt_train_eval", doc="GBT train/test AUC on embeddings (T1/T3/A5)")
 def ml_gbt_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _binary_embeddings(spark, sf_dir, cap=2500).cache()
+    df = cache(_binary_embeddings(spark, sf_dir, cap=2500))
     train = df.filter(~F.col("is_test"))
     test = df.filter(F.col("is_test"))
     params = GBTParams(eta=0.1, max_depth=3, n_boost_round=5, seed=42)
@@ -64,6 +64,7 @@ def ml_gbt_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     auc_train = score_auc(predict_gbt(model, train))
     auc_test = score_auc(predict_gbt(model, test))
     n_train, n_test = train.count(), test.count()
+    df.unpersist()
     return spark.createDataFrame(
         [(n_train, n_test, round(auc_train, 3), round(auc_test, 3))],
         "n_train long, n_test long, auc_train double, auc_test double",
@@ -72,7 +73,7 @@ def ml_gbt_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q("ml_gbt_top_predictions", doc="per-row GBT scores joined back by id (J5 shape)")
 def ml_gbt_top_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _binary_embeddings(spark, sf_dir, cap=2500).cache()
+    df = cache(_binary_embeddings(spark, sf_dir, cap=2500))
     train = df.filter(~F.col("is_test"))
     test = df.filter(F.col("is_test"))
     model = fit_gbt(train, GBTParams(eta=0.1, max_depth=3, n_boost_round=5, seed=42))
@@ -184,11 +185,10 @@ def ml_deconfound_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_cv_fold_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.crossvalidate import fit_one_round_cv
 
-    df = (
+    df = cache(
         _binary_embeddings(spark, sf_dir, cap=2000)
         .withColumn("row_idx", F.col("vec_id"))
         .drop("is_test")
-        .cache()
     )
     params = GBTParams(eta=0.1, max_depth=3, n_boost_round=4, seed=42)
     results, oof = fit_one_round_cv(df, params, n_folds=3, row_chunks=100)
@@ -210,18 +210,19 @@ def ml_incremental_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.crossvalidate import incremental_fit, predict_ensemble
     from ..ml.scoring import score_auc
 
-    df = (
+    df = cache(
         _binary_embeddings(spark, sf_dir, cap=2000)
         .withColumn("row_idx", F.col("vec_id"))
-        .cache()
     )
     train = df.filter(~F.col("is_test"))
     test = df.filter(F.col("is_test"))
     params = GBTParams(eta=0.1, max_depth=3, n_boost_round=3, seed=42)
     models = incremental_fit(train, params, n_rounds=3, sample_fraction=0.7, row_chunks=100)
     auc = score_auc(predict_ensemble(models, test))
+    n_test = test.count()
+    df.unpersist()
     return spark.createDataFrame(
-        [(len(models), test.count(), round(auc, 3))],
+        [(len(models), n_test, round(auc, 3))],
         "n_models int, n_test long, auc_test double",
     )
 
@@ -334,15 +335,14 @@ def ml_platt_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.scale import apply_platt, fit_platt
     from ..ml.scoring import score_auc
 
-    df = (
+    df = cache(
         _binary_embeddings(spark, sf_dir, cap=2000)
         .withColumn("row_idx", F.col("vec_id"))
         .drop("is_test")
-        .cache()
     )
     params = GBTParams(eta=0.1, max_depth=3, n_boost_round=4, seed=42)
     _, oof = fit_one_round_cv(df, params, n_folds=3, row_chunks=100)
-    oof = oof.cache()
+    oof = cache(oof)
     model = fit_platt(oof)
     calibrated = apply_platt(model, oof)
     # one job for all three means (was three separate collects)
@@ -353,6 +353,8 @@ def ml_platt_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     mean_raw, mean_cal, base_rate = means["mean_raw"], means["mean_cal"], means["base_rate"]
     auc = score_auc(calibrated, pred_col="y_pred_platt_scaled")
+    df.unpersist()
+    oof.unpersist()
     return spark.createDataFrame(
         [
             (
@@ -373,15 +375,15 @@ def ml_platt_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_boruta_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.boruta import boruta
 
-    df = (
+    df = cache(
         _binary_embeddings(spark, sf_dir, cap=2000)
         .withColumn("row_idx", F.col("vec_id"))
         .drop("is_test")
-        .cache()
     )
     names = [f"dim_{i}" for i in range(64)]
     params = GBTParams(eta=0.15, max_depth=3, n_boost_round=3, seed=42)
     res = boruta(df, names, params, max_iter=3, sample_fraction=0.8, seed=42)
+    df.unpersist()
     return spark.createDataFrame(
         [
             (
@@ -400,7 +402,7 @@ def ml_boruta_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_feature_importances(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.explain import feature_importances
 
-    df = _binary_embeddings(spark, sf_dir, cap=2500).cache()
+    df = cache(_binary_embeddings(spark, sf_dir, cap=2500))
     train = df.filter(~F.col("is_test"))
     model = fit_gbt(train, GBTParams(eta=0.1, max_depth=3, n_boost_round=5, seed=42))
     cols = spark.createDataFrame(
@@ -418,10 +420,9 @@ def ml_feature_importances(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_tree_contributions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.contrib import mean_abs_contributions, tree_contributions
 
-    df = (
+    df = cache(
         _binary_embeddings(spark, sf_dir, cap=2500)
         .withColumn("row_idx", F.col("vec_id"))
-        .cache()
     )
     train = df.filter(~F.col("is_test"))
     model = fit_gbt(train, GBTParams(eta=0.1, max_depth=3, n_boost_round=5, seed=42))
@@ -440,10 +441,9 @@ def ml_refit_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.scoring import score_auc
     from ..ml.train import predict_gbt
 
-    df = (
+    df = cache(
         _binary_embeddings(spark, sf_dir, cap=2000)
         .withColumn("row_idx", F.col("vec_id"))
-        .cache()
     )
     train = df.filter(~F.col("is_test"))
     test = df.filter(F.col("is_test"))
@@ -457,9 +457,11 @@ def ml_refit_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["pos"] for r in sorted(imp, key=lambda r: -r["mean_abs_contrib"])[:16]
     )
     pruned_feats = F.array(*[F.col("features")[i] for i in keep])
-    pruned = df.withColumn("features", pruned_feats).cache()
+    pruned = cache(df.withColumn("features", pruned_feats))
     refit = fit_gbt(pruned.filter(~F.col("is_test")), params)
     auc_pruned = score_auc(predict_gbt(refit, pruned.filter(F.col("is_test"))))
+    df.unpersist()
+    pruned.unpersist()
     return spark.createDataFrame(
         [(64, len(keep), round(auc_full, 3), round(auc_pruned, 3))],
         "n_features int, n_kept int, auc_full double, auc_pruned double",
@@ -470,10 +472,9 @@ def ml_refit_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_exact_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.contrib import tree_shap_values
 
-    df = (
+    df = cache(
         _binary_embeddings(spark, sf_dir, cap=2000)
         .withColumn("row_idx", F.col("vec_id"))
-        .cache()
     )
     train = df.filter(~F.col("is_test"))
     model = fit_gbt(train, GBTParams(eta=0.1, max_depth=3, n_boost_round=4, seed=42))
@@ -501,11 +502,10 @@ def ml_shap_interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distributed plumbing (broadcast trees + mapInPandas) is the real
     # 100 TB path.
     keep = list(range(8))
-    df = (
+    df = cache(
         _binary_embeddings(spark, sf_dir, cap=1500)
         .withColumn("row_idx", F.col("vec_id"))
         .withColumn("features", F.array(*[F.col("features")[i] for i in keep]))
-        .cache()
     )
     train = df.filter(~F.col("is_test"))
     model = fit_gbt(train, GBTParams(eta=0.2, max_depth=3, n_boost_round=3, seed=42))
@@ -591,7 +591,7 @@ def _kmeans_lloyd_sql(k: int, iters: int) -> str:
     doc="deterministic Lloyd k-means (fixed init/iters, exact-decimal "
     "distances) — iterative clustering under the value-hash gate",
 )
-def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Optimization round 11 (guide §2.3/§2.4, the _semdedup_marks
     # shape): the old form posexploded every vector and joined the
     # centroid table per POSITION — n·dim·K rows through a decimal hash
@@ -609,9 +609,8 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
 
     e = load_tables(spark, sf_dir)["embeddings"]
     emb = _fanout(e).select("vec_id", to_double(F.col("embedding")).alias("xs"))
-    if persist:
-        # feeds every assignment and every centroid update
-        emb = emb.persist()
+    # feeds every assignment and every centroid update
+    emb = cache(emb)
 
     dec = "decimal(25,6)"
     ct = emb.filter(F.col("vec_id") < _KM_K).select(
@@ -676,14 +675,7 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         )
         .orderBy("cluster")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [emb])
-
-
-ALL_SPECS["ml_kmeans_lloyd"].lazy_plan = (
-    lambda spark, sf_dir: ml_kmeans_lloyd(spark, sf_dir, persist=False)
-)
 
 
 @_q("ml_kmeans_clusters", doc="MLlib KMeans over embeddings (seeded; cluster-size profile)")
@@ -933,7 +925,7 @@ def ml_platt_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_tables(spark, sf_dir)["embeddings"]
     t = (F.col("label") >= 5).cast("int")
-    g = (
+    g = cache(
         e.filter(F.col("vec_id") < 2000)
         .select(((t * 3 + F.pmod(F.col("vec_id"), F.lit(7))) / 10.0).alias("x"), t.alias("t"))
         .groupBy("x")
@@ -941,7 +933,6 @@ def ml_platt_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("double").alias("n"),
             F.sum("t").cast("double").alias("k"),
         )
-        .cache()
     )
     tot = g.agg(F.sum("n").alias("nn"), F.sum("k").alias("kk"))
     ab = newton_logistic_grouped(g, iters=8)
@@ -2048,10 +2039,9 @@ def ml_prune_replay_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_continuation_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.crossvalidate import incremental_fit
 
-    df = (
+    df = cache(
         _binary_embeddings(spark, sf_dir, cap=600)
         .withColumn("row_idx", F.col("vec_id"))
-        .cache()
     )
     train = df.filter(~F.col("is_test"))
     params = GBTParams(eta=0.1, max_depth=2, n_boost_round=2, seed=42)
@@ -2059,6 +2049,7 @@ def ml_continuation_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         train, params, n_rounds=3, sample_fraction=0.7, row_chunks=100
     )
     n_train = train.count()
+    df.unpersist()
     rows, cum = [], 0
     for i, m in enumerate(models, 1):
         nt = int(m.getNumTrees)

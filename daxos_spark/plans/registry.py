@@ -1,4 +1,10 @@
-"""QuerySpec registry + cross-engine determinism helpers.
+"""QuerySpec registry, cache-lifetime helpers, and cross-engine
+determinism helpers.
+
+Cache lifetime is owned here (see ``cache`` / ``materialize`` /
+``checkpoint_release`` below): plan modules never persist or checkpoint
+directly, so the plan tools can rebuild any registered callable as a
+pure lazy pipeline under ``plan_context()``.
 
 Determinism strategy for the value-hash correctness gate
 (CORRECTNESS_r{N}.json): floating-point SUM/AVG over doubles is
@@ -16,8 +22,10 @@ integer tie-break, so sort order matches too.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,11 +81,6 @@ class QuerySpec:
     oracle: str | None  # None → non-SQL-expressible, rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
-    # For queries whose registered callable EAGERLY materializes (the
-    # localCheckpoint + unpersist cache-lifetime pattern): a builder of
-    # the equivalent LAZY pipeline, so tools/plan_audit.py can inspect
-    # the real physical plan instead of the post-checkpoint RDD scan.
-    lazy_plan: Callable[[SparkSession, str], DataFrame] | None = None
 
 
 ALL_SPECS: dict[str, QuerySpec] = {}
@@ -176,12 +179,52 @@ def get_specs() -> dict[str, QuerySpec]:
     return out
 
 
+# ------------------------------------------------------- cache lifetime
+#
+# One policy for every plan module: persist an intermediate that several
+# consumers read (``cache``), eagerly checkpoint a small intermediate or
+# output (``materialize``), and on return checkpoint the output and
+# release the caches (``checkpoint_release``). Plan modules never call
+# .persist()/.cache()/.localCheckpoint(eager=True) themselves
+# (tests/test_cache_discipline.py), so ``plan_context`` can turn all
+# three into identities: under it a registered callable returns its
+# full lazy pipeline, which is what the plan tools inspect instead of a
+# post-checkpoint RDD scan.
+
+_PLAN_ONLY: ContextVar[bool] = ContextVar("daxos_plan_only", default=False)
+
+
+@contextmanager
+def plan_context() -> Iterator[None]:
+    """Tool-only: build registered callables without caching or
+    checkpointing anything, so the returned DataFrame carries the whole
+    physical plan (tools/plan_audit.py, tools/dump_plan.py)."""
+    token = _PLAN_ONLY.set(True)
+    try:
+        yield
+    finally:
+        _PLAN_ONLY.reset(token)
+
+
+def cache(df: DataFrame) -> DataFrame:
+    """Persist an intermediate read by several consumers; the caller
+    releases it (usually through ``checkpoint_release``)."""
+    return df if _PLAN_ONLY.get() else df.persist()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly checkpoint a (small) intermediate so its lineage is
+    evaluated once."""
+    return df if _PLAN_ONLY.get() else df.localCheckpoint(eager=True)
+
+
 def checkpoint_release(out: DataFrame, caches: list) -> DataFrame:
     """The cache-lifetime discipline for registered callables: eagerly
     materialize the (small) output, then release every corpus-sized
     persisted intermediate so non-harness callers never accumulate
-    leaked caches. Queries using this register a ``lazy_plan`` (their
-    ``persist=False`` path) so plan_audit still sees the real plan."""
+    leaked caches."""
+    if _PLAN_ONLY.get():
+        return out
     out = out.localCheckpoint(eager=True)
     for c in caches:
         c.unpersist()

@@ -42,7 +42,7 @@ from ..functions.hashing import md5_long_sql
 from ..functions.similarity import int_code
 from ..functions.vectors import dot, l2_norm, to_double
 from .docpipe import _fanout
-from .registry import ALL_SPECS, QuerySpec, checkpoint_release, register, sql_trunc6, trunc6
+from .registry import QuerySpec, cache, checkpoint_release, register, sql_trunc6, trunc6
 
 _DIM = 64
 
@@ -237,10 +237,7 @@ def semdedup_summary(e: DataFrame, n_clusters: int) -> DataFrame:
     # K-row result: materialize eagerly and release the corpus-exploded
     # position cache + assignment cache (see t_substring_spans — callers
     # outside the cache-clearing harnesses must not accumulate these)
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    return checkpoint_release(out, caches)
 
 
 def _semdedup_summary_lazy(e: DataFrame, n_clusters: int):
@@ -257,12 +254,10 @@ def _semdedup_summary_lazy(e: DataFrame, n_clusters: int):
     return out, caches
 
 
-def _semdedup_marks(e: DataFrame, n_clusters: int, persist: bool = True):
+def _semdedup_marks(e: DataFrame, n_clusters: int):
     """Shared SemDeDup core: returns (``af`` assignments, ``rm``
     removed ids, and the persisted intermediates the caller must
-    unpersist after materializing its result). ``persist=False`` is
-    the plan-inspection path — it never registers a cache the caller
-    cannot release."""
+    unpersist after materializing its result)."""
     dec = "decimal(25,6)"
     # fan out FIRST: the local embeddings table is a single-file,
     # single-row-group parquet (1 partition), and everything downstream
@@ -274,8 +269,7 @@ def _semdedup_marks(e: DataFrame, n_clusters: int, persist: bool = True):
     # _fanout is a no-op; values are row-wise, so the plan change
     # cannot move the hash.
     emb = _fanout(e).select("vec_id", to_double(F.col("embedding")).alias("xs"))
-    if persist:
-        emb = emb.persist()
+    emb = cache(emb)
     # exploded view, derived on demand from the cached arrays — only the
     # centroid update needs it
     u = emb.select("vec_id", F.posexplode("xs").alias("pos", "x"))
@@ -330,9 +324,8 @@ def _semdedup_marks(e: DataFrame, n_clusters: int, persist: bool = True):
         "cluster", F.coalesce(F.col("marr"), F.col("carr")).alias("carr")
     )
     af = assign(ct1)
-    if persist:
-        # pair join reads it twice (both sides) + final agg
-        af = af.persist()
+    # pair join reads it twice (both sides) + final agg
+    af = cache(af)
 
     idot = lambda x, y: F.aggregate(
         F.zip_with(x, y, lambda p, q: p * q), F.lit(0).cast("bigint"), lambda acc, v: acc + v
@@ -390,16 +383,11 @@ def v_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, caches = _semdedup_keep_lazy(spark, sf_dir)
     # vector-cardinality keep-list (3 ints/row): checkpoint + release
     # the much larger exploded-position and assignment caches
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    return checkpoint_release(out, caches)
 
 
-def _semdedup_keep_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
-    af, rm, caches = _semdedup_marks(
-        load_tables(spark, sf_dir)["embeddings"], _SD_K, persist=persist
-    )
+def _semdedup_keep_lazy(spark: SparkSession, sf_dir: str):
+    af, rm, caches = _semdedup_marks(load_tables(spark, sf_dir)["embeddings"], _SD_K)
     out = (
         af.join(rm, (rm["cluster"] == af["cluster"]) & (rm["dup_id"] == af["vec_id"]), "left")
         .select(
@@ -410,25 +398,6 @@ def _semdedup_keep_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
         .orderBy("vec_id")
     )
     return out, caches
-
-
-# plan_audit hooks: the registered callables checkpoint eagerly
-ALL_SPECS["e_semdedup"].lazy_plan = lambda spark, sf_dir: _semdedup_summary_lazy(
-    load_tables(spark, sf_dir)["embeddings"], _SD_K
-)[0]
-ALL_SPECS["v_semdedup_keep"].lazy_plan = (
-    lambda spark, sf_dir: _semdedup_keep_lazy(spark, sf_dir)[0]
-)
-
-
-def _semdedup_scaled_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
-    e = load_tables(spark, sf_dir)["embeddings"]
-    return _semdedup_summary_lazy(e, math.ceil(e.count() / _SDS_TARGET))[0]
-
-
-ALL_SPECS["v_semdedup_scaled"].lazy_plan = _semdedup_scaled_lazy
 
 
 # --------------------------------------------------------------------------
@@ -511,7 +480,7 @@ def _mmr_oracle() -> str:
     "(λ=0.5); selection order and scores hash-checked vs an unrolled "
     "greedy-layer SQL oracle",
 )
-def v_mmr_rerank(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def v_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir)["embeddings"]
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
@@ -536,9 +505,8 @@ def v_mmr_rerank(spark: SparkSession, sf_dir: str, persist: bool = True) -> Data
         .filter(F.col("rk") <= _MMR_CAND)
         .select("qid", "cid", "rel", "cv", "cn")
     )
-    if persist:
-        # both sides of the pair join
-        cand = cand.persist()
+    # both sides of the pair join
+    cand = cache(cand)
     a, b = cand.alias("a"), cand.alias("b")
     pr = a.join(
         b, (F.col("a.qid") == F.col("b.qid")) & (F.col("a.cid") != F.col("b.cid"))
@@ -579,14 +547,7 @@ def v_mmr_rerank(spark: SparkSession, sf_dir: str, persist: bool = True) -> Data
     out = res.select(
         "qid", "step", "selected_id", trunc6(F.col("score")).alias("mmr_score")
     ).orderBy("qid", "step")
-    if not persist:
-        return out
     return checkpoint_release(out, [cand])
-
-
-ALL_SPECS["v_mmr_rerank"].lazy_plan = (
-    lambda spark, sf_dir: v_mmr_rerank(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -975,14 +936,13 @@ def _hybrid_oracle() -> str:
     "then exact embedding rerank of only those candidates; both scores "
     "hash-checked",
 )
-def v_hybrid_search(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def v_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text as T
 
     t = load_tables(spark, sf_dir)
     d = t["documents"]
     tok = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("t"))
-    if persist:
-        tok = tok.persist()
+    tok = cache(tok)
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dlen"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1040,14 +1000,7 @@ def v_hybrid_search(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         .select("qid", "rk", "doc_id", trunc6(F.col("bm25")).alias("bm25"), "sem_dot")
         .orderBy("qid", "rk")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [tok])
-
-
-ALL_SPECS["v_hybrid_search"].lazy_plan = (
-    lambda spark, sf_dir: v_hybrid_search(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -1178,7 +1131,7 @@ def _pca_oracle() -> str:
     doc="top principal direction via 3 relational power-iteration rounds "
     "on the distributed Gram (one corpus pass; loadings hash-checked)",
 )
-def v_pca_power(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def v_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram = e_gram_matrix(spark, sf_dir)  # (i, j, gram) upper triangle
     gf = gram.unionByName(
         gram.filter(F.col("i") < F.col("j")).select(
@@ -1186,8 +1139,7 @@ def v_pca_power(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataF
         )
     ).coalesce(1)  # dim^2 rows (~4k): one partition keeps the
     # 3 iteration matvecs out of 64-task shuffle territory
-    if persist:
-        gf = gf.persist()
+    gf = cache(gf)
     v = gf.select(F.col("i").alias("pos")).distinct().withColumn("x", F.lit(1.0))
     dec = "decimal(38,12)"
     for _ in range(_PI_ITERS):
@@ -1203,14 +1155,7 @@ def v_pca_power(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataF
             "pos", (F.col("w") / F.col("z")).alias("x")
         )
     out = v.select("pos", trunc6(F.col("x")).alias("pc1_loading")).orderBy("pos")
-    if not persist:
-        return out
     return checkpoint_release(out, [gf])
-
-
-ALL_SPECS["v_pca_power"].lazy_plan = (
-    lambda spark, sf_dir: v_pca_power(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -2037,12 +1982,10 @@ def _db_cid_sql(cx: str, cy: str) -> str:
 def v_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, cells = _grid_dbscan_lazy(spark, sf_dir)
     # cluster-cardinality output — eager-materialize, release the cell cache
-    out = out.localCheckpoint(eager=True)
-    cells.unpersist()
-    return out
+    return checkpoint_release(out, [cells])
 
 
-def _grid_dbscan_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
+def _grid_dbscan_lazy(spark: SparkSession, sf_dir: str):
     from ..operators.components import connected_components
 
     e = load_tables(spark, sf_dir)["embeddings"]
@@ -2061,9 +2004,8 @@ def _grid_dbscan_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("cid", cid)
     )
-    if persist:
-        # feeds core/border/noise consumers
-        cells = cells.persist()
+    # feeds core/border/noise consumers
+    cells = cache(cells)
     core = cells.filter(F.col("cnt") >= _DB_MINPTS)
     # offset-explode adjacency: each core cell emits its 9 shifted keys,
     # an equi-join on the shifted key finds neighbors — never a distance
@@ -2144,11 +2086,6 @@ def _grid_dbscan_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
         .orderBy("component")
     )
     return out, cells
-
-
-ALL_SPECS["v_grid_dbscan"].lazy_plan = (
-    lambda spark, sf_dir: _grid_dbscan_lazy(spark, sf_dir, persist=False)[0]
-)
 
 
 # --------------------------------------------------------------------------
@@ -2382,9 +2319,7 @@ def v_kcenter_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TakeOrdered scans every partition (so the cache fully
     # materializes), then the previous round's state is released —
     # at most two corpus-code copies resident at any time.
-    state = v.select(
-        "vec_id", "cc", idot(F.col("cc"), F.col("cc")).alias("aa")
-    ).persist()
+    state = cache(v.select("vec_id", "cc", idot(F.col("cc"), F.col("cc")).alias("aa")))
     first = state.orderBy("vec_id").limit(1).collect()[0]
     centers = [(0, int(first["vec_id"]), [int(x) for x in first["cc"]], 0)]
     for r in range(1, _KC_K):
@@ -2397,9 +2332,7 @@ def v_kcenter_init(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(c_norm).cast("bigint")
         )
         d_run = d_new if r == 1 else F.least(F.col("d"), d_new)
-        prev, state = state, state.select(
-            "vec_id", "cc", "aa", d_run.alias("d")
-        ).persist()
+        prev, state = state, cache(state.select("vec_id", "cc", "aa", d_run.alias("d")))
         pick = (
             state.filter(F.col("d") > 0)
             .orderBy(F.col("d").desc(), "vec_id")
@@ -2681,13 +2614,17 @@ def v_rotated_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature words only) scans the 4-longs-per-vector table instead
     # of re-running the Arrow UDFs per plan branch (plan_audit's
     # duplicated-ArrowEvalPython rule caught the un-materialized form).
+    # LAZY: the index boundary is part of the plan itself, not a cache
+    # lifetime choice, so it holds under registry.plan_context too; the
+    # query's first action fills it (each partition computed once —
+    # concurrent readers of a checkpoint block wait on its write lock).
     sig = e.select(
         "vec_id",
         _bq_word(emb, 0).alias("w0"),
         _bq_word(emb, 32).alias("w1"),
         rot_w0(emb).alias("r0"),
         rot_w1(emb).alias("r1"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     vecs = e.select("vec_id", to_double(emb).alias("v"), l2_norm(emb).alias("vn"))
     qv = vecs.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("vn").alias("qn")

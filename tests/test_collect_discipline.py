@@ -50,12 +50,15 @@ ALLOWED: dict[str, tuple[int, str]] = {
     "sources/tables.py:read_covars": (1, "1-row uniqueness-validation aggregate"),
     "sources/tables.py:best_hp_row": (1, "1-row arg-best (order+limit 1)"),
     # -- ml: gramian / coefficient collects (reference M-family design) -----
-    "ml/deconfound.py:compute_beta_matrix": (
-        2,
-        "1-row covariate gramian aggregate + p-length per-column beta rows "
-        "(reference deconfound.py broadcasts the same beta matrix)",
+    "ml/deconfound.py:_gramian": (
+        1,
+        "1-row covariate gramian aggregate (+ the label path's Cᵀy sums)",
     ),
-    "ml/deconfound.py:label_betas": (1, "1-row gramian aggregate"),
+    "ml/deconfound.py:compute_beta_matrix": (
+        1,
+        "p-length per-column CᵀX rows (reference deconfound.py broadcasts "
+        "the same beta matrix)",
+    ),
     "ml/deconfound.py:standardize_covars": (1, "1-row mean/std aggregate"),
     "ml/scale.py:fit_platt_relational": (1, "1-row (a,b) Platt coefficients"),
     "ml/explain.py:used_features": (1, "p-length column name list"),

@@ -3,9 +3,11 @@ partition-pruned gold layout."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from daxos_spark.catalog import load_tables
+from daxos_spark.catalog import TABLES, load_tables
 from daxos_spark.corpus import build_clean_corpus, scrub_pii
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -31,6 +33,24 @@ def test_build_clean_corpus_invariants(spark, tmp_path):
         for r in load_tables(spark, SF_DIR)["documents"].select("lang").distinct().collect()
     }
     assert langs <= src
+
+
+def test_build_clean_corpus_all_documents_gated_out(spark, tmp_path):
+    """A batch the quality gate drops wholesale (no stopwords at all)
+    must yield an empty gold layer, not a schema-inference error."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{SF_DIR}/{t}.parquet", sf / f"{t}.parquet")
+    docs = load_tables(spark, SF_DIR)["documents"].limit(5)
+    docs.withColumn("text", F.lit("alpha beta gamma delta")).write.parquet(
+        str(sf / "documents.parquet")
+    )
+    res = build_clean_corpus(spark, str(sf), str(tmp_path / "out"))
+    assert res.n_input == 5
+    assert res.n_canonical == 1  # identical texts share one fingerprint
+    assert res.n_clean == 0
 
 
 def test_gold_layout_partition_pruned(spark, tmp_path):

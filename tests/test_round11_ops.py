@@ -127,16 +127,17 @@ def test_refinery_html_composed_equals_staged(spark, tmp_path):
     assert funnel[2] == ("extracted", 3)  # doc 3's extraction is empty
 
     # staged lane: gates fed the materialized extracted text directly
-    ext, verdicts, caches = _refinery_html_parts(spark, sf, persist=False)
+    ext, verdicts, caches = _refinery_html_parts(spark, sf)
     exd = ext.filter(F.length("text") > 0)
     import pandas as pd_  # noqa: F401
 
     mat = exd.select("doc_id", "source", "text").toPandas()
     assert set(mat["doc_id"]) == {0, 1, 2}
+    gf, nll, cov, staged_caches = _refinery_gates_from(spark.createDataFrame(mat))
     staged = _refinery_verdicts(
-        *_refinery_gates_from(
-            spark.createDataFrame(mat), persist=False
-        )[:3],
+        gf,
+        nll,
+        cov,
         # semantic stage vacuous here (no embeddings rows for these ids)
         spark.createDataFrame([], "doc_id bigint, sem0 int"),
     )
@@ -146,8 +147,10 @@ def test_refinery_html_composed_equals_staged(spark, tmp_path):
     }
     composed = {
         int(r["doc_id"]): (r["p_gopher"], r["p_ppl"], r["p_sub"], r["p_sem"])
-        for r in _refinery_html_parts(spark, sf, persist=False)[1].collect()
+        for r in verdicts.collect()
     }
+    for c in caches + staged_caches:
+        c.unpersist()
     assert got == composed and set(got) == {0, 1, 2}
 
 

@@ -149,14 +149,12 @@ def test_kn_capped_equals_uncapped_when_cap_exceeds_vocab(spark):
     from daxos_spark.plans.textpipe import _KN_OOV, _KN_V, _kn_doc_nll
 
     d = load_tables(spark, SF_DIR)["documents"]
-    base = {
-        r["doc_id"]: (r["n_bigrams"], r["nll"])
-        for r in _kn_doc_nll(d, persist=False)[0].collect()
-    }
-    wide = {
-        r["doc_id"]: (r["n_bigrams"], r["nll"])
-        for r in _kn_doc_nll(d, top_v=10**6, persist=False)[0].collect()
-    }
+    knll, caches = _kn_doc_nll(d)
+    base = {r["doc_id"]: (r["n_bigrams"], r["nll"]) for r in knll.collect()}
+    knll, wide_caches = _kn_doc_nll(d, top_v=10**6)
+    wide = {r["doc_id"]: (r["n_bigrams"], r["nll"]) for r in knll.collect()}
+    for c in caches + wide_caches:
+        c.unpersist()
     assert base == wide
     # at the gated V the OOV bucket must actually appear in the bigram
     # stream (otherwise the hash gate isn't exercising the remap)
@@ -180,10 +178,12 @@ def test_two_lane_jaccard_pairs_identical_below_collision_horizon(spark):
     from daxos_spark.plans.docpipe import _jaccard_edge_pairs
 
     d = load_tables(spark, SF_DIR)["documents"]
-    p1, caches1 = _jaccard_edge_pairs(d, persist=False)
-    p2, caches2 = _jaccard_edge_pairs(d, persist=False, two_lane=True)
+    p1, caches1 = _jaccard_edge_pairs(d)
+    p2, caches2 = _jaccard_edge_pairs(d, two_lane=True)
     one = {(r["da"], r["db"]) for r in p1.collect()}
     two = {(r["da"], r["db"]) for r in p2.collect()}
+    for c in caches1 + caches2:
+        c.unpersist()
     assert one == two and len(one) > 0
     # the two-lane stream really carries the second lane
     assert "s2" in caches2[0].columns and "s2" not in caches1[0].columns

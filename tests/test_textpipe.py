@@ -706,6 +706,38 @@ def test_dedup_best_keep_matches_python_replay(spark):
         assert (g["kept_doc"], g["kept_chars"], g["n_removed"]) == (kd, kc, nr), cl
 
 
+def test_eager_dedup_specs_are_lazy_under_plan_context(spark):
+    """Under registry.plan_context the two eager dedup patterns
+    (checkpoint_release in d_lsh_candidates, the inline checkpoint
+    formerly in t_dedup_best_keep) hand back their whole lazy pipeline:
+    no cache, a corpus scan instead of an output checkpoint scan, and a
+    clean plan audit. The one RDD scan left in t_dedup_best_keep is the
+    connected-components label relation, whose per-round lineage
+    truncation (operators/components.py) is part of the real plan."""
+    import re
+    import sys
+    from pathlib import Path
+
+    from daxos_spark.plans import get_specs
+    from daxos_spark.plans.registry import plan_context
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from plan_audit import audit_plan
+
+    specs = get_specs()
+    for name in ("d_lsh_candidates", "t_dedup_best_keep"):
+        with plan_context():
+            df = specs[name].spark(spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" not in plan, name
+        assert "FileScan parquet" in plan, name
+        rdd_scans = re.findall(r"Scan ExistingRDD\[[^\]]*\]", plan)
+        cc_labels = re.compile(r"Scan ExistingRDD\[node#\d+L,lab#\d+L\]")
+        assert all(cc_labels.fullmatch(s) for s in rdd_scans), (name, rdd_scans)
+        assert audit_plan(plan, name) == [], name
+    spark.catalog.clearCache()
+
+
 def test_bigram_ppl_matches_python(spark):
     """Exact replay of the interpolated bigram NLL (integer-ratio
     probabilities, decimal-summed logs)."""

@@ -3,8 +3,8 @@
 
 Usage: python tools/dump_plan.py OUT_DIR SUFFIX [sf_dir] name [name ...]
 
-Writes OUT_DIR/<name>_<SUFFIX>.txt per query. Uses the spec's
-``lazy_plan`` when present (the real pipeline plan, not the
+Writes OUT_DIR/<name>_<SUFFIX>.txt per query. Builds each query under
+``registry.plan_context()`` (the real pipeline plan, not the
 post-checkpoint RDD scan of eagerly-materializing callables).
 Construction-time actions (collect-driven iterative builds) run at the
 given SF, so prefer a small sf_dir.
@@ -27,15 +27,14 @@ def main() -> None:
     out_dir.mkdir(parents=True, exist_ok=True)
 
     sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
-    from daxos_spark.plans.registry import get_specs
+    from daxos_spark.plans.registry import get_specs, plan_context
     from daxos_spark.session import get_spark
 
     spark = get_spark()
     specs = get_specs()
     for name in names:
-        spec = specs[name]
-        builder = spec.lazy_plan or spec.spark
-        df = builder(spark, sf_dir)
+        with plan_context():
+            df = specs[name].spark(spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(
             df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"

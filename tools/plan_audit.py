@@ -32,16 +32,20 @@ Usage:
     python tools/plan_audit.py --wgl-table [sf_dir]   # classification table
 
 Exit 1 on any violation; prints one line per query otherwise.
-Construction-time actions (codebook collects, Newton steps) run at the
-given SF, so the audit doubles as a construction smoke test.
+Every query is built under ``registry.plan_context()``, so eagerly
+materializing callables return their whole lazy pipeline instead of a
+post-checkpoint RDD scan. Construction-time actions (codebook collects,
+Newton steps) run at the given SF, so the audit doubles as a
+construction smoke test.
 """
 
 from __future__ import annotations
 
+import pathlib
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 
 # rank-filter sites where the rank is re-derived over an input a
@@ -154,30 +158,25 @@ def main() -> int:
     only = set(argv[1:])
 
     import __spark_entry__ as E
-    from daxos_spark.plans import get_specs
+    from daxos_spark.plans.registry import plan_context
     from daxos_spark.session import get_spark
 
     spark = get_spark()
     qs = E.queries()
-    specs = get_specs()
     bad = 0
     for name in sorted(qs):
         if only and name not in only:
             continue
-        # eager (checkpoint-pattern) queries expose their real pipeline
-        # via lazy_plan — auditing the registered callable would only
-        # see the post-checkpoint RDD scan
-        spec = specs.get(name)
-        fn = spec.lazy_plan if spec is not None and spec.lazy_plan else qs[name]
         try:
-            df = fn(spark, sf_dir)
+            with plan_context():
+                df = qs[name](spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # construction failure is itself a finding
             print(f"ERROR {name}: {type(e).__name__}: {str(e)[:140]}")
             bad += 1
             continue
         finally:
-            spark.catalog.clearCache()  # lazy builders may mark persists
+            spark.catalog.clearCache()  # operators outside the registry may cache
         if wgl_table:
             sites = _wgl_sites(plan)
             if sites:
