@@ -241,7 +241,6 @@ BENCH_QUERIES = [
     "t_refinery_linear",
     # round 8
     "t_kneser_ney_capped",
-    "t_dedup_clusters_lane2",
     "q_dp_histogram",
     "v_ndcg_audit",
     "q_link_prediction",
@@ -252,7 +251,6 @@ BENCH_QUERIES = [
     "t_char_entropy",
     "t_shard_manifest",
     "q_dp_mean",
-    "t_refinery_lane2",
     "d_simhash_neardup",
     "d_sorted_neighborhood",
     "q_trade_shortest_path",

@@ -5,7 +5,10 @@ computable in any ANSI-SQL engine (the duckdb oracle included) — unlike
 Spark's murmur3 ``hash()``/``xxhash64()``, which are engine-specific.
 Cost: md5 is ~3× slower than xxhash64, still JVM-side and codegen'd; at
 100 TB swap `md5_long` for `xxhash64` when cross-engine comparability is
-not needed (the API is the same shape).
+not needed (the API is the same shape). Joins that take hash equality
+as content identity — the shingle-Jaccard edge build and the
+ExactSubstr K-gram stream — key on both 56-bit lanes of one digest
+(``md5_lanes``, 112 bits) at every scale.
 
 Reference analogue: the reference has no content hashing at all — this
 is part of the beyond-parity training-data-pipeline surface (dedup,
@@ -22,7 +25,8 @@ _HEX_CHARS = 14
 
 
 def md5_long(c: Column, seed: int | None = None) -> Column:
-    """Deterministic 56-bit integer hash of a string column.
+    """Deterministic 56-bit integer hash of a string column: the first
+    lane of its md5 digest (see ``md5_lanes``).
 
     Oracle-SQL equivalent:
       CAST(concat('0x', substr(md5(x), 1, 14)) AS BIGINT)          (duckdb)
@@ -30,7 +34,25 @@ def md5_long(c: Column, seed: int | None = None) -> Column:
     """
     if seed is not None:
         c = F.concat(c, F.lit(f"#{seed}"))
-    return F.conv(F.substring(F.md5(c), 1, _HEX_CHARS), 16, 10).cast("bigint")
+    return md5_lanes(F.md5(c))[0]
+
+
+def md5_lanes(hx: Column) -> tuple[Column, Column]:
+    """The two independent 56-bit lanes (hex chars 1-14 and 15-28) of an
+    md5 hex column, as bigints.
+
+    One 56-bit lane is collision-free at test cardinalities, but past
+    ~2^28 distinct keys (a 100 TB corpus has far more shingles and
+    K-grams) birthday collisions become expected. Keying a join on both
+    lanes — 112 bits from one md5 evaluation — pushes the bound past
+    2^50. Callers explode/project the hex digest once and derive both
+    lanes from that column: codegen does not CSE md5 across sibling
+    expressions.
+    """
+    return tuple(
+        F.conv(F.substring(hx, 1 + i * _HEX_CHARS, _HEX_CHARS), 16, 10).cast("bigint")
+        for i in range(2)
+    )
 
 
 def md5_long_sql(expr: str, seed: int | None = None) -> str:
@@ -38,27 +60,6 @@ def md5_long_sql(expr: str, seed: int | None = None) -> str:
     if seed is not None:
         expr = f"concat({expr}, '#{seed}')"
     return f"CAST(concat('0x', substr(md5({expr}), 1, {_HEX_CHARS})) AS BIGINT)"
-
-
-def md5_long_lane2(c: Column, seed: int | None = None) -> Column:
-    """Second independent 56-bit lane (md5 hex chars 15-28) of the same
-    digest ``md5_long`` reads chars 1-14 of.
-
-    A single 56-bit key is collision-free at test cardinalities but at
-    the documented 100 TB scale (> ~2^28 distinct shingles) birthday
-    collisions become expected (~2^(2*28-56) = O(1) at 2^28, growing
-    quadratically past it), creating spurious near-dup edges. The
-    production escape hatch is to key shingle joins on BOTH lanes —
-    112 bits total from one md5 evaluation, pushing the birthday bound
-    past 2^50 distinct shingles — at the cost of one extra long per
-    row. Test-scale queries keep the single lane (the duckdb oracle
-    joins raw strings, so the hash gate would expose any collision).
-    """
-    if seed is not None:
-        c = F.concat(c, F.lit(f"#{seed}"))
-    return F.conv(
-        F.substring(F.md5(c), _HEX_CHARS + 1, _HEX_CHARS), 16, 10
-    ).cast("bigint")
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:

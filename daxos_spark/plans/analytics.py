@@ -18,15 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..functions.hashing import md5_long_sql
-from .registry import QuerySpec, cache, checkpoint_release, register, sql_trunc6, trunc6
-
-
-def _q(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=tags))
-        return fn
-
-    return deco
+from .registry import cache, checkpoint_release, query, sql_trunc6, trunc6
 
 
 # --------------------------------------------------------------------------
@@ -35,7 +27,7 @@ def _q(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ())
 # partials map-side), then a driver-sized conditional count. NULL
 # stage timestamps propagate through the comparison to "not converted"
 # identically in both engines.
-@_q(
+@query(
     "q_funnel_conversion",
     """
     WITH m AS (
@@ -74,7 +66,7 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agg on user_id and the cohort/offset count — both keyed small.
 # Weeks are integer day-arithmetic from a fixed epoch date (NOT
 # date_trunc('week'), whose week-start convention is engine-dependent).
-@_q(
+@query(
     "q_weekly_cohort_retention",
     """
     WITH firsts AS (
@@ -121,7 +113,7 @@ def _epoch_day(c) -> F.Column:
 # cumulative window are calendar-sized (driver-small at any data scale),
 # so the single-partition window over days is safe even at 100 TB of
 # events. Day buckets are integer epoch-day arithmetic (engine-neutral).
-@_q(
+@query(
     "q_new_vs_returning",
     """
     WITH d AS (
@@ -177,7 +169,7 @@ def q_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded, so per-row cost is O(frame) regardless of data scale.
 # Prices go through FLOOR(x*100) integer cents so interpolated medians
 # are exact dyadic doubles (.0/.5) in both engines.
-@_q(
+@query(
     "q_rolling_median_price",
     """
     SELECT o_custkey, o_orderkey,
@@ -215,7 +207,7 @@ def q_rolling_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 # standard co-occurrence plan whose cost is Σ w² over orders, NOT a
 # cross join. At 100 TB the distinct + join co-partition on l_orderkey
 # (one shuffle, AQE handles skewed mega-orders).
-@_q(
+@query(
     "q_part_cooccurrence",
     """
     WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
@@ -266,7 +258,7 @@ def q_part_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # then lexicographically-LAST event type — max(struct(cnt, type)) gives
 # exactly that total order, and the oracle's row_number(ORDER BY n DESC,
 # event_type DESC) is the same order expressed independently.
-@_q(
+@query(
     "q_modal_event_type",
     """
     WITH c AS (
@@ -432,7 +424,7 @@ def _trajectory_knn_lazy(spark: SparkSession, sf_dir: str, fixed_panel: bool):
     return out, tr
 
 
-@_q(
+@query(
     "q_trajectory_knn",
     _trajectory_sql(
         "SELECT user_id AS pid, tkey, cnt AS pcnt FROM tr WHERE user_id % 10 = 0"
@@ -447,7 +439,7 @@ def q_trajectory_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return checkpoint_release(out, [tr])
 
 
-@_q(
+@query(
     "q_trajectory_knn_panel",
     _trajectory_sql(
         f"""SELECT t.user_id AS pid, t.tkey, t.cnt AS pcnt
@@ -486,7 +478,7 @@ def q_trajectory_knn_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KM_HORIZON_H = 72
 
 
-@_q(
+@query(
     "q_km_time_to_error",
     f"""
     WITH life0 AS (
@@ -582,7 +574,7 @@ def q_km_time_to_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rank filter over the symmetrized pair list.
 # Scale: pair mass bounded by Σ order-width² (basket-bounded, never
 # items²); degree table broadcasts; probe selection is TakeOrdered.
-@_q(
+@query(
     "q_itemcf_topk",
     f"""
     WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -696,7 +688,7 @@ def q_itemcf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: transitions from one lag window per user; the model is
 # alphabet²-sized (broadcast); scoring is a map-side lookup join; the
 # accuracy rollup is per-predicted-type cardinality.
-@_q(
+@query(
     "q_markov_next_event",
     """
     WITH seq AS (
@@ -843,7 +835,7 @@ def _bt_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "q_bradley_terry",
     _bt_oracle(),
     doc="Bradley-Terry preference ranking (Hunter '04 MM, 6 rounds): "

@@ -20,23 +20,15 @@ from ..catalog import load_tables
 from ..functions.hashing import md5_long_sql
 from ..multimodal.columns import attach_blob, sample_frames
 from .docpipe import _fanout
-from .registry import QuerySpec, cache, checkpoint_release, register
+from .registry import cache, checkpoint_release, query
 
 _FRAME_BYTES = 256
 _STRIDE = 2
 
 
-def _q(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=("multimodal",)))
-        return fn
-
-    return deco
-
-
 # --------------------------------------------------------------------------
 # blob metadata stats — binary length + content hash per source bucket.
-@_q(
+@query(
     "m_blob_stats",
     """
     SELECT source,
@@ -67,7 +59,7 @@ def m_blob_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # frame fan-out counts — REAL mapInPandas frame sampler on the Spark
 # side; arithmetic expectation on the oracle side.
-@_q(
+@query(
     "m_frame_counts",
     f"""
     SELECT source,
@@ -98,7 +90,7 @@ def m_frame_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # resize fan-in — REAL mapInPandas byte-stride resize on the Spark side;
 # ceil-arithmetic byte expectation on the oracle side.
-@_q(
+@query(
     "m_resize_bytes",
     """
     SELECT source,
@@ -133,7 +125,7 @@ def m_resize_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # feature-extraction fan-in — REAL vectorized byte-histogram extractor;
 # the oracle checks the Σhistogram == Σbytes invariant per source.
-@_q(
+@query(
     "m_byte_histogram",
     """
     SELECT source,
@@ -176,7 +168,7 @@ _MAGIC = [
 ]
 
 
-@_q(
+@query(
     "m_magic_sniff",
     f"""
     WITH b AS (
@@ -256,7 +248,7 @@ def _cdc_cuts_sql() -> str:
     """
 
 
-@_q(
+@query(
     "m_cdc_chunks",
     f"""
     WITH c AS (
@@ -352,7 +344,7 @@ def m_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NEARDUP_MIN_SHARED = 3
 
 
-@_q(
+@query(
     "m_asset_neardup",
     f"""
     WITH c AS (
@@ -462,7 +454,7 @@ _SHOT_FRAME = 32
 _SHOT_TAU = 256
 
 
-@_q(
+@query(
     "m_shot_boundaries",
     f"""
     WITH f AS (

@@ -21,15 +21,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_tables
 from ..functions.hashing import md5_long_sql
-from .registry import QuerySpec, dsum, register, sql_dsum, sql_trunc6, trunc6
-
-
-def _q(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ("diag",)):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=tags))
-        return fn
-
-    return deco
+from .registry import dsum, query, sql_dsum, sql_trunc6, trunc6
 
 
 # --------------------------------------------------------------------------
@@ -39,7 +31,7 @@ def _q(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ("d
 # small vs corpus) and joins back by term — at real scale the df side is
 # broadcastable after aggregation. idf is kept log-free (tf·N/df in
 # exact micro-units) so both engines rank identically.
-@_q(
+@query(
     "d_tfidf_top_terms",
     """
     WITH toks AS (
@@ -99,7 +91,7 @@ def d_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # surface (slowly-changing user state from raw events). One window per
 # user (shuffle on user_id only), no self-join: change-point filter via
 # lag, interval close via lead over the surviving change rows.
-@_q(
+@query(
     "q_scd2_user_state",
     """
     WITH ordered AS (
@@ -153,7 +145,7 @@ def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # argmin-by-struct trick as SemDeDup).  The oracle states the
 # equivalent ROW_NUMBER formulation; max-by-lexicographic(ts,
 # event_id) picks the identical row because event_id is unique.
-@_q(
+@query(
     "q_cdc_apply",
     f"""
     WITH ranked AS (
@@ -214,7 +206,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # summary above proves the rollup; this gate proves the per-key payload
 # + delete flag a MERGE sink would consume). Same partial-aggregable
 # max(struct) compaction; output is key-cardinality.
-@_q(
+@query(
     "q_cdc_materialize",
     """
     WITH ranked AS (
@@ -261,7 +253,7 @@ def q_cdc_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is elementwise-max → order/partitioning independent), so asserting
 # the 5% envelope (at rsd=0.01, 5σ) is a stable cross-engine check; the
 # oracle supplies the exact count and a TRUE literal.
-@_q(
+@query(
     "q_approx_distinct_check",
     """
     SELECT o_orderpriority,
@@ -302,7 +294,7 @@ def q_approx_distinct_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # heavy keys and their ratio to the mean key load, from one counts
 # groupBy plus a scalar total (broadcast). skew_ratio_micro =
 # floor(cnt·1e6·n_keys/total) in exact integer micro-units.
-@_q(
+@query(
     "q_key_skew_profile",
     """
     WITH counts AS (
@@ -338,7 +330,7 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Language-diversity (Gini impurity) per source — corpus-composition
 # diagnostic. Gini = 1 − Σ(p_l²) computed as exact integer rational
 # (total² − Σcnt²)/total² in micro-units: log-free, so no libm drift.
-@_q(
+@query(
     "d_source_lang_gini",
     """
     WITH cnts AS (
@@ -390,7 +382,7 @@ def d_source_lang_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so a half-IQR envelope is a rock-solid cross-engine TRUE; the oracle
 # supplies the exact quantiles and TRUE literals (same contract as
 # q_approx_distinct_check).
-@_q(
+@query(
     "q_approx_quantile_check",
     f"""
     SELECT o_orderstatus,
@@ -433,7 +425,7 @@ def q_approx_quantile_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # evidence the window algebra is right, not just that two copies of
 # one query agree. At 100 TB the window plan is the only viable one
 # (the naive skyline self-join is quadratic per brand).
-@_q(
+@query(
     "q_pareto_frontier",
     """
     WITH p AS (
@@ -514,7 +506,7 @@ def _qi_customer(customer: DataFrame) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q_k_anonymity",
     f"""
     WITH classes AS (
@@ -589,7 +581,7 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # change count, users with no prior change resolve to NULL (LEFT ASOF
 # semantics). This is the training-data use case "features as of label
 # time" in miniature — the leakage-safe feature-store join.
-@_q(
+@query(
     "q_scd2_lookup",
     """
     WITH b AS (
@@ -700,7 +692,7 @@ def q_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LDIV_L = 3
 
 
-@_q(
+@query(
     "q_l_diversity",
     f"""
     WITH r AS (
@@ -793,7 +785,7 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ERASE_N = 10
 
 
-@_q(
+@query(
     "q_erasure_audit",
     f"""
     WITH subj AS (
@@ -919,7 +911,7 @@ def _tclose_emd_sql() -> str:
     return diffs
 
 
-@_q(
+@query(
     "q_t_closeness",
     f"""
     WITH r AS (
@@ -1057,7 +1049,7 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DP_EPS_INV = 2.0  # b = sensitivity/ε = 1/0.5
 
 
-@_q(
+@query(
     "q_dp_histogram",
     f"""
     WITH c AS (
@@ -1141,7 +1133,7 @@ _DPM_CLIP = 200000.0  # C: clip bound on o_totalprice
 _DPM_EPS = 0.5
 
 
-@_q(
+@query(
     "q_dp_mean",
     f"""
     WITH c AS (
@@ -1222,11 +1214,10 @@ def q_dp_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # m rows per group cross the exchange — then a 256-row final agg; the
 # exact COUNT(DISTINCT) audit column is itself a two-level exchange on
 # (event_type, user_id). Flagship use: per-event-type distinct users.
-_HLL_M = 256  # 2^8 registers
 _HLL_TWO49 = 562949953421312.0  # 2^49, the integer-sum descale
 
 
-@_q(
+@query(
     "q_hll_distinct",
     f"""
     WITH h AS (
@@ -1352,7 +1343,7 @@ _DPQ_EPS = 0.5
 _DPQ_BUCKET = 5000
 
 
-@_q(
+@query(
     "q_dp_quantile",
     f"""
     WITH hist AS (

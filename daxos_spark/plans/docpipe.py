@@ -28,7 +28,7 @@ from ..functions.hashing import (
     simhash32,
     word_shingles,
 )
-from .registry import QuerySpec, cache, checkpoint_release, register, sql_davg, sql_trunc6, trunc6
+from .registry import cache, checkpoint_release, query, sql_davg, trunc6
 
 _NORM = "lower(trim(text))"
 _TOKS = f"string_split_regex({_NORM}, '\\s+')"
@@ -49,17 +49,9 @@ def _fanout(df):
         return df
     return df.repartition(target)
 
-def _q(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=("docs",)))
-        return fn
-
-    return deco
-
-
 # --------------------------------------------------------------------------
 # token statistics per language — token counting surface.
-@_q(
+@query(
     "d_token_stats",
     f"""
     SELECT lang,
@@ -91,7 +83,7 @@ def d_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # per-doc quality scoring — length/stopword heuristics, pure arithmetic.
 _SW = "', '".join(T.EN_STOPWORDS)
-@_q(
+@query(
     "d_quality_scores",
     f"""
     WITH t AS (
@@ -128,7 +120,7 @@ def _sql_hits(lang: str) -> str:
     return f"len(list_filter({_TOKS}, t -> list_contains(['{words}'], t)))"
 
 
-@_q(
+@query(
     "d_langid_confusion",
     f"""
     WITH s AS (
@@ -181,7 +173,7 @@ def d_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # exact dedup summary — fingerprint = md5 of normalized text (hash-groupBy
 # dedup; canonical row = min doc_id per fingerprint).
-@_q(
+@query(
     "d_exact_dedup",
     f"""
     WITH f AS (
@@ -212,7 +204,7 @@ def d_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # occurrence wins). At scale this is an anti-join of the batch against
 # the corpus fingerprint index (a bucketed/Bloom-backed table), never a
 # re-scan of the full corpus text: fingerprints shuffle, documents don't.
-@_q(
+@query(
     "d_incremental_dedup",
     f"""
     WITH f AS (
@@ -280,7 +272,7 @@ def _sql_minhash(seed: int) -> str:
     return f"MIN({md5_long_sql('s', seed=seed)})"
 
 
-@_q(
+@query(
     "d_minhash_signatures",
     f"""
     WITH toks AS (
@@ -338,7 +330,7 @@ def _cap_hot_shingles(
     AQE broadcasts the anti-join side while it fits and shuffles past
     that (the round-8 bounded-broadcast rule; its own guard test
     caught this site's old hint).
-    ``keys`` is the shingle identity — two-lane callers pass
+    ``keys`` is the shingle identity — _jaccard_edge_pairs passes
     ("s", "s2") so a lane-1 birthday collision past ~2^28 distinct
     shingles cannot pool two shingles' document frequencies and drop
     both below-cap shingles (the same collision class the 112-bit join
@@ -487,7 +479,7 @@ def _capped_stream(
     )
 
 
-@_q(
+@query(
     "d_jaccard_pairs",
     f"""
     WITH toks AS (
@@ -558,7 +550,7 @@ def d_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # SimHash (32-bit) per document — near-dup fingerprint via per-bit
 # majority vote of token hashes.
-@_q(
+@query(
     "d_simhash",
     f"""
     WITH tok AS (
@@ -657,7 +649,7 @@ def _lsh_candidates_oracle(bucket_cap: int = _LSH_BUCKET_CAP) -> str:
     """
 
 
-@_q("d_lsh_candidates", _lsh_candidates_oracle())
+@query("d_lsh_candidates", _lsh_candidates_oracle())
 def d_lsh_candidates(
     spark: SparkSession,
     sf_dir: str,
@@ -792,7 +784,7 @@ def d_lsh_candidates(
 _W = 4  # winnow window (shingle hashes per window)
 
 
-@_q(
+@query(
     "d_winnow_fingerprints",
     f"""
     WITH toks AS (
@@ -849,7 +841,7 @@ def d_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_PAT = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
-@_q(
+@query(
     "d_bpe_token_stats",
     f"""
     WITH t AS (
@@ -893,7 +885,7 @@ def d_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JACC_THR = 0.02
 
 
-def _jaccard_edge_pairs(d: DataFrame, two_lane: bool = False):
+def _jaccard_edge_pairs(d: DataFrame):
     """Shared near-dup edge construction: capped shingle self-join →
     Jaccard ≥ _JACC_THR (da, db) pairs. Same hot-shingle DF cap as
     d_jaccard_pairs — the cluster edges come from the identical shingle
@@ -903,61 +895,32 @@ def _jaccard_edge_pairs(d: DataFrame, two_lane: bool = False):
     materialize their small output and release every handle
     (registry.checkpoint_release).
 
-    ``two_lane=True`` is the 100 TB scale configuration: the shingle
-    join keys on BOTH independent 56-bit lanes of one md5 digest
-    (112 bits total), pushing the birthday-collision bound from ~2^28
-    to past 2^50 distinct shingles. The digest is computed ONCE per
-    shingle (explode the hex, derive both lanes from the exploded
-    column — codegen does not CSE md5 across sibling expressions, the
-    q_poisson_bootstrap lesson) for one extra long per row. At test
-    cardinalities both configurations produce identical pair sets, so
-    the gated two-lane query shares the single-lane raw-string oracle
-    (t_dedup_clusters_lane2)."""
-    from ..functions.hashing import md5_long
+    Shingle identity is the 112-bit key (s, s2): both 56-bit lanes of
+    one md5 digest (functions/hashing.md5_lanes), birthday-safe past
+    2^50 distinct shingles where one lane stops at ~2^28."""
+    from ..functions.hashing import md5_lanes
 
-    # shingles are hashed to 56-bit ids INSIDE the explode select (one
-    # projection): the persisted stream carries (int, small-str, long)
-    # instead of a 20-40 B shingle string — ~half the cache bytes, and
-    # every downstream shuffle/sort compares fixed-width longs instead
-    # of strings (round-6 profile: the edge build dominated
-    # t_dedup_best_keep at 7.8 of 10 s; this + the broadcast size
-    # joins below took the query to ~6 s). The pair set is unchanged:
-    # md5_long is collision-free at these cardinalities (56-bit over
-    # ~2e5 distinct shingles; the duckdb oracle keeps joining the raw
-    # strings, so the hash gate would expose any collision).
-    # CARDINALITY BOUND: one 56-bit lane is safe to ~2^28 distinct
-    # shingles (birthday). A 100 TB corpus exceeds that — production
-    # runs pass two_lane=True (below), which keys the join on both
-    # md5 lanes (112 bits, safe past 2^50). The flag is exercised
-    # end-to-end by the registered t_dedup_clusters_lane2, hash-checked
-    # against the same raw-string oracle as d_dedup_clusters.
-    if two_lane:
-        sh0 = d.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.transform(
-                    word_shingles(F.lower(F.trim(F.col("text"))), 3),
-                    lambda s: F.md5(s),
-                )
-            ).alias("h"),
-        ).select(
-            "doc_id",
-            "source",
-            F.conv(F.substring("h", 1, 14), 16, 10).cast("bigint").alias("s"),
-            F.conv(F.substring("h", 15, 14), 16, 10).cast("bigint").alias("s2"),
-        )
-    else:
-        sh0 = d.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.transform(
-                    word_shingles(F.lower(F.trim(F.col("text"))), 3),
-                    lambda s: md5_long(s),
-                )
-            ).alias("s"),
-        )
+    # shingles are hashed to two 56-bit lanes right after the explode
+    # (one md5 per shingle, both lanes derived from the exploded digest):
+    # the persisted stream carries (int, small-str, long, long) instead
+    # of a 20-40 B shingle string, and every downstream shuffle/sort
+    # compares fixed-width longs instead of strings (round-6 profile:
+    # the edge build dominated t_dedup_best_keep at 7.8 of 10 s; this +
+    # the broadcast size joins below took the query to ~6 s). The
+    # duckdb oracle keeps joining the raw strings, so the hash gate
+    # would expose any collision.
+    sh0 = d.select(
+        "doc_id",
+        "source",
+        F.explode(
+            F.transform(
+                word_shingles(F.lower(F.trim(F.col("text"))), 3),
+                lambda s: F.md5(s),
+            )
+        ).alias("h"),
+    )
+    s1, s2 = md5_lanes(F.col("h"))
+    sh0 = sh0.select("doc_id", "source", s1.alias("s"), s2.alias("s2"))
     # Bucket-based candidate generation (optimization round 11, guide
     # §2.3/§2.4): ONE groupBy of the exploded shingle stream into
     # per-(source, shingle) sorted doc-id buckets replaces the previous
@@ -987,10 +950,10 @@ def _jaccard_edge_pairs(d: DataFrame, two_lane: bool = False):
     # measured on this lane and rejected: sorting the full
     # hashed-shingle stream inside the window costs ~+0.5-1.3 s at
     # sf0.1 across the CC family, vs +0.16 s for this form.
-    keys = ["s", "s2"] if two_lane else ["s"]
+    keys = ("s", "s2")
     # two consumers: the DF count pass + the bucket build
     sh0 = cache(sh0)
-    sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF, keys=tuple(keys))
+    sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF, keys=keys)
     bkt = (
         sh.groupBy("source", *keys)
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
@@ -1065,7 +1028,7 @@ CC_ORACLE_CTE = f"""
     )"""
 
 
-@_q(
+@query(
     "d_dedup_clusters",
     CC_ORACLE_CTE
     + """, csize AS (
@@ -1083,32 +1046,11 @@ def d_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return checkpoint_release(out, caches)
 
 
-# the 100 TB scale configuration of the same clustering: shingle joins
-# keyed on BOTH 56-bit md5 lanes (112 bits — birthday-safe past 2^50
-# distinct shingles vs ~2^28 for one lane). At test cardinalities the
-# pair set is identical, so the raw-string CC oracle is shared verbatim
-# — the hash gate proves the lane-2 plumbing changes nothing below the
-# collision horizon while exercising it end-to-end.
-@_q(
-    "t_dedup_clusters_lane2",
-    CC_ORACLE_CTE
-    + """, csize AS (
-      SELECT component, COUNT(*) AS sz FROM comp GROUP BY component
-    )
-    SELECT sz AS cluster_size, COUNT(*) AS n_clusters
-    FROM csize GROUP BY sz ORDER BY sz
-    """,
-)
-def t_dedup_clusters_lane2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, caches = _dedup_clusters_lazy(spark, sf_dir, two_lane=True)
-    return checkpoint_release(out, caches)
-
-
-def _dedup_clusters_lazy(spark: SparkSession, sf_dir: str, two_lane: bool = False):
+def _dedup_clusters_lazy(spark: SparkSession, sf_dir: str):
     from ..operators.components import connected_components
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
-    pairs, caches = _jaccard_edge_pairs(d, two_lane=two_lane)
+    pairs, caches = _jaccard_edge_pairs(d)
     comp = connected_components(pairs, "da", "db")
     csize = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
     out = (
@@ -1124,7 +1066,7 @@ def _dedup_clusters_lazy(spark: SparkSession, sf_dir: str, two_lane: bool = Fals
 # actually materializes: canonical (first doc per exact-dup group) ∧
 # quality above threshold ∧ language-ID agrees with the label. One
 # query chaining dedup + scoring + langid; counts per (lang, source).
-@_q(
+@query(
     "d_clean_corpus",
     f"""
     WITH f AS (
@@ -1178,7 +1120,7 @@ def d_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with a constant 20× amplification on one side. (A naive join keyed
 # only on lang with a BETWEEN band filter would be quadratic per
 # language bucket.) Prefix-capping bounds per-pair edit-distance cost.
-@_q(
+@query(
     "d_levenshtein_neardup",
     f"""
     WITH p AS (
@@ -1236,7 +1178,7 @@ def d_levenshtein_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # WindowGroupLimit Partial→Final pushdown (map-side min_n-row heaps
 # per class); with a runtime column bound every class would FULL-SORT
 # at 100 TB. The curriculum-thresholds collect+relit precedent.
-@_q(
+@query(
     "d_balanced_sample",
     f"""
     WITH ranked AS (
@@ -1290,7 +1232,7 @@ def d_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact token span. Linear fan-out = ceil(n_tok/stride) per doc, no
 # shuffle at all until the final order (which a real pipeline writes
 # unsorted).
-@_q(
+@query(
     "d_context_windows",
     f"""
     WITH toks AS (
@@ -1346,7 +1288,7 @@ def d_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fraction over its own shingles. This is the n-gram-overlap decontam
 # pass every serious pretraining pipeline runs (cf. GPT-3 App. C /
 # Gopher §A.3 methodology, public papers).
-@_q(
+@query(
     "d_decontamination",
     f"""
     WITH toks AS (
@@ -1407,7 +1349,7 @@ def d_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the engine's own text columns. regexp_replace is JVM-side codegen;
 # at scale this is a pure map stage (zero shuffles before the audit
 # agg).
-@_q(
+@query(
     "d_pii_scrub",
     r"""
     WITH planted AS (
@@ -1618,7 +1560,7 @@ _SEMANTIC_KEEP_CTE_BODY = """
         ON rm.db = b.doc_id"""
 
 
-@_q("d_semantic_neardup", _semantic_oracle())
+@query("d_semantic_neardup", _semantic_oracle())
 def d_semantic_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     b, s, caches = _semantic_pairs(spark, sf_dir)
     out = (
@@ -1640,7 +1582,7 @@ def d_semantic_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc, keep = 1 unless it is the HIGHER-id side of a similar blocked
 # pair — identical keep-lowest-id semantics to v_semdedup_keep, LSH
 # blocking instead of Lloyd clusters.
-@_q(
+@query(
     "v_semantic_keep",
     f"""{_semantic_pairs_cte()}, keepv AS ({_SEMANTIC_KEEP_CTE_BODY}
     )
@@ -1666,7 +1608,7 @@ def v_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at 100 TB each source packs independently (parallel, one shuffle on
 # source) instead of a global single-partition cumsum; within a source
 # the order is the deterministic doc_id. All-integer output.
-@_q(
+@query(
     "d_sequence_packing",
     f"""
     WITH toks AS (
@@ -1722,7 +1664,7 @@ def d_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agg, all partition-local until the per-doc groupBy; the flag uses
 # integer cross-multiplication (dup·5 > total ⇔ dup_frac > 0.2), so
 # the whole result is integer-exact. Per-language summary output.
-@_q(
+@query(
     "d_repetition_filter",
     f"""
     WITH toks AS (
@@ -1789,7 +1731,7 @@ def d_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scorer has, with the counts staying integer-exact end to end. At
 # 100 TB the vocab is itself fact-scale, so the join is a key-partitioned
 # shuffle join (NOT broadcast) — exactly how it's written here.
-@_q(
+@query(
     "d_oov_bigram_score",
     f"""
     WITH toks AS (
@@ -1900,7 +1842,7 @@ def _soft_dedup_lazy(spark: SparkSession, sf_dir: str):
     return out, caches
 
 
-@_q(
+@query(
     "d_soft_dedup_weights",
     CC_ORACLE_CTE
     + """, csize AS (

@@ -32,18 +32,10 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables
 from ..functions.hashing import md5_long_sql
 from .docpipe import _fanout
-from .registry import QuerySpec, cache, checkpoint_release, register, sql_trunc6, trunc6
+from .registry import cache, checkpoint_release, query, sql_trunc6, trunc6
 
 _NORM = "lower(trim(text))"
 _TOKS = f"string_split_regex({_NORM}, '\\s+')"
-
-
-def _q(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=("docs",)))
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------
@@ -52,7 +44,7 @@ def _q(name: str, oracle: str | None, doc: str = ""):
 # (all occurrences, not distinct — occurrence counts need multiplicity)
 # and ONE shuffle on the gram; count(distinct doc_id) expands to the
 # standard two-phase distinct-agg plan.
-@_q(
+@query(
     "d_hot_ngrams",
     f"""
     WITH toks AS (
@@ -103,7 +95,7 @@ def d_hot_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deliberately-independent brute-force all-pairs formulation; the Spark
 # plan is the inverted-prefix-index candidate join — equal output proves
 # the filter is lossless.
-@_q(
+@query(
     "d_prefix_filter_jaccard",
     f"""
     WITH tk AS (
@@ -264,7 +256,7 @@ def d_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # source relation is driver-small at any corpus scale, and the weights
 # come out integer-exact (decimal-truncated sqrt, exact decimal total,
 # floor-micro ratio) so the hash gate applies.
-@_q(
+@query(
     "d_temperature_mix",
     f"""
     WITH per_doc AS (
@@ -328,7 +320,7 @@ def d_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # both engines and across runs — the reproducible-subsample contract
 # the reference's seeded row shuffle gives, lifted to weighted
 # sampling). Stateless per-row decision: scales as a scan.
-@_q(
+@query(
     "d_temperature_sample",
     f"""
     WITH per_doc AS (
@@ -407,7 +399,7 @@ def d_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # twin can reproduce it without a side table); a real deployment
 # broadcasts the trained weight vector instead — same plan shape.
 # Integer weights keep the score exact cross-engine.
-@_q(
+@query(
     "d_text_classifier",
     f"""
     WITH t AS (
@@ -459,7 +451,7 @@ def d_text_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # equi-join here is the same plan with the cap removed. Per-token
 # ln(count) terms go through the DECIMAL(25,6) sum so the per-doc sum
 # is order-independent cross-engine.
-@_q(
+@query(
     "d_unigram_ppl",
     f"""
     WITH tok AS (
@@ -559,7 +551,7 @@ def _dsir_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "d_dsir_weights",
     _dsir_oracle(),
     doc="DSIR hashed-unigram importance weights (target-vs-raw LM log-ratio)",
@@ -698,7 +690,7 @@ def _agreement_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "t_dedup_agreement",
     _agreement_oracle(),
     doc="lexical(MinHash-shingle Jaccard) vs semantic(embedding cosine) "
@@ -729,10 +721,10 @@ def _dedup_agreement_lazy(spark: SparkSession, sf_dir: str):
     # 20-40 B shingle strings — ~half the cache bytes, long-keyed
     # shuffles/aggregations. Counts (n_sh, n_inter) are unchanged:
     # xxhash64 is collision-free at these cardinalities (~2×10⁵
-    # distinct shingles at sf0.1; 64-bit birthday bound ~2³², one
-    # decade past the single-md5-lane convention the CC family
-    # documents), and the raw-string duckdb oracle would expose any
-    # collision through the hash gate.
+    # distinct shingles at sf0.1; 64-bit birthday bound ~2³² — below
+    # the 112-bit md5_lanes key of _jaccard_edge_pairs), and the
+    # raw-string duckdb oracle would expose any collision through the
+    # hash gate.
     sh0 = d.select(
         "doc_id",
         "source",
@@ -937,7 +929,7 @@ def _simhash_neardup_oracle(bucket_cap: int = _SIMHASH_BUCKET_CAP) -> str:
     """
 
 
-@_q(
+@query(
     "d_simhash_neardup",
     _simhash_neardup_oracle(),
     doc="SimHash near-dup pairs (Manku et al. WWW'07): 56-bit per-bit "
@@ -1087,7 +1079,7 @@ def _cap_census_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "t_cap_census",
     _cap_census_oracle(),
     doc="cap-fire census (no-silent-caps monitor): for each dedup "
@@ -1218,7 +1210,7 @@ def _snm_cand_sql(key: str) -> str:
     """
 
 
-@_q(
+@query(
     "d_sorted_neighborhood",
     f"""
     WITH cand AS (

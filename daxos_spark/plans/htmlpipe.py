@@ -39,16 +39,8 @@ from ..functions.html import (
     sql_keep_cond,
 )
 from .docpipe import _fanout
-from .registry import QuerySpec, checkpoint_release, materialize, register, sql_trunc6, trunc6
+from .registry import checkpoint_release, materialize, query, sql_trunc6, trunc6
 from .textpipe import _TOKS, _gopher_cte
-
-
-def _q(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=("html",)))
-        return fn
-
-    return deco
 
 
 # one template, two renderings — the pieces are (kind, value) with kind
@@ -139,7 +131,7 @@ def _html_stats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "t_html_extract",
     f"""
     WITH {_HTML_BASE_SQL},
@@ -223,7 +215,7 @@ from ..functions.html import sql_page_text as _sql_page_text  # noqa: E402
 _STRIP_SQL = _sql_page_text("html")
 
 
-@_q(
+@query(
     "t_html_refinery",
     f"""
     WITH {_HTML_BASE_SQL},
@@ -426,7 +418,7 @@ def _refinery_html_lazy(spark: SparkSession, sf_dir: str):
     return out, caches
 
 
-@_q(
+@query(
     "t_refinery_html_e2e",
     _refinery_html_oracle(),
     doc="the COMPLETE production refinery from raw crawl HTML as one "
@@ -481,7 +473,7 @@ def _linked_html_spark() -> F.Column:
     )
 
 
-@_q(
+@query(
     "t_html_link_graph",
     f"""
     WITH base AS (
@@ -639,7 +631,7 @@ def _optout_verdicts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "t_optout_gate",
     f"""
     WITH {_optout_base_sql()}
@@ -674,7 +666,7 @@ def t_optout_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "t_optout_refinery",
     f"""
     WITH {_optout_base_sql()}, ka AS (
@@ -844,7 +836,7 @@ def _dedup_recovery_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "t_html_dedup_recovery",
     _dedup_recovery_oracle(),
     doc="extraction->dedup synergy census: every document rendered "

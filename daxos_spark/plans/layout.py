@@ -33,24 +33,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_tables
 from ..functions import text as T
 from .docpipe import _TOKS, _fanout
-from .registry import (
-    QuerySpec,
-    davg,
-    dsum,
-    register,
-    sql_davg,
-    sql_dsum,
-    sql_trunc6,
-    trunc6,
-)
-
-
-def _q(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=("layout",)))
-        return fn
-
-    return deco
+from .registry import davg, dsum, query, sql_davg, sql_dsum, sql_trunc6, trunc6
 
 
 # --------------------------------------------------------------------------
@@ -162,7 +145,7 @@ _ZORDER_SQL = f"""
 """
 
 
-@_q(
+@query(
     "q_zorder_skipping",
     _ZORDER_SQL,
     doc="Z-order clustering audit: 64 range-files per layout "
@@ -329,7 +312,7 @@ def q_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TARGET_BYTES = 65536  # compaction target per output file
 
 
-@_q(
+@query(
     "q_compaction_plan",
     f"""
     WITH files AS (
@@ -401,7 +384,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ETA = "4.0"
 
 
-@_q(
+@query(
     "t_domain_mixture",
     f"""
     WITH docs AS (

@@ -19,15 +19,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables
 from ..ml.scoring import score_auc
 from ..ml.train import GBTParams, fit_gbt, predict_gbt
-from .registry import QuerySpec, cache, checkpoint_release, register
-
-
-def _q(name: str, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=None, doc=doc, tags=("ml",)))
-        return fn
-
-    return deco
+from .registry import cache, checkpoint_release, query
 
 
 def _binary_embeddings(
@@ -54,7 +46,7 @@ def _binary_embeddings(
     )
 
 
-@_q("ml_gbt_train_eval", doc="GBT train/test AUC on embeddings (T1/T3/A5)")
+@query("a2_gbt_train_eval", doc="GBT train/test AUC on embeddings (T1/T3/A5)")
 def ml_gbt_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = cache(_binary_embeddings(spark, sf_dir, cap=2500))
     train = df.filter(~F.col("is_test"))
@@ -71,7 +63,7 @@ def ml_gbt_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ml_gbt_top_predictions", doc="per-row GBT scores joined back by id (J5 shape)")
+@query("ml_gbt_top_predictions", doc="per-row GBT scores joined back by id (J5 shape)")
 def ml_gbt_top_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = cache(_binary_embeddings(spark, sf_dir, cap=2500))
     train = df.filter(~F.col("is_test"))
@@ -83,14 +75,6 @@ def ml_gbt_top_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("y_pred").desc(), F.col("vec_id"))
         .limit(20)
     )
-
-
-def _qo(name: str, oracle: str, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=("ml",)))
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------
@@ -117,8 +101,8 @@ _MOM = """
 """
 
 
-@_qo(
-    "ml_deconfound_dims",
+@query(
+    "a2_deconfound_dims",
     f"""
     WITH u AS (
       SELECT CAST(label AS DOUBLE) AS c,
@@ -181,7 +165,7 @@ def ml_deconfound_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ml_cv_fold_scores", doc="single-param 3-fold CV per-fold scores (T9/X1)")
+@query("a2_cv_fold_scores", doc="single-param 3-fold CV per-fold scores (T9/X1)")
 def ml_cv_fold_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.crossvalidate import fit_one_round_cv
 
@@ -205,7 +189,7 @@ def ml_cv_fold_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ml_incremental_ensemble", doc="incremental chunk-subsample training + ensemble predict (T7/O8)")
+@query("a2_incremental_ensemble", doc="incremental chunk-subsample training + ensemble predict (T7/O8)")
 def ml_incremental_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.crossvalidate import incremental_fit, predict_ensemble
     from ..ml.scoring import score_auc
@@ -227,8 +211,8 @@ def ml_incremental_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_qo(
-    "ml_ld_clump",
+@query(
+    "a2_ld_clump",
     """
     WITH RECURSIVE ss AS (
       SELECT p_brand AS chrom, (p_partkey*997)%1000000 AS pos,
@@ -295,8 +279,8 @@ def ml_ld_clump(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MAF-filter dataflow (A12/Q1, reference Snakefile:73-104 plink --maf):
 # per-column frequency aggregation + threshold projection, run over
 # embedding dimensions (frequency = share of positive values).
-@_qo(
-    "ml_maf_filter",
+@query(
+    "a2_maf_filter",
     f"""
     WITH u AS (
       SELECT generate_subscripts(embedding, 1) - 1 AS pos,
@@ -329,7 +313,7 @@ def ml_maf_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ml_platt_calibration", doc="CV → OOF predictions → Platt fit/apply (M6/M7)")
+@query("a2_platt_calibration", doc="CV → OOF predictions → Platt fit/apply (M6/M7)")
 def ml_platt_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.crossvalidate import fit_one_round_cv
     from ..ml.scale import apply_platt, fit_platt
@@ -371,7 +355,7 @@ def ml_platt_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ml_boruta_selection", doc="Boruta shadow-feature selection loop (T12)")
+@query("ml_boruta_selection", doc="Boruta shadow-feature selection loop (T12)")
 def ml_boruta_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.boruta import boruta
 
@@ -398,7 +382,7 @@ def ml_boruta_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ml_feature_importances", doc="trained-model importance table keyed by feature name (T6/A3)")
+@query("ml_feature_importances", doc="trained-model importance table keyed by feature name (T6/A3)")
 def ml_feature_importances(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.explain import feature_importances
 
@@ -416,7 +400,7 @@ def ml_feature_importances(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ml_tree_contributions", doc="Saabas path contributions (T4 SHAP analogue) + A3 mean|contrib|")
+@query("a2_tree_contributions", doc="Saabas path contributions (T4 SHAP analogue) + A3 mean|contrib|")
 def ml_tree_contributions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.contrib import mean_abs_contributions, tree_contributions
 
@@ -435,7 +419,7 @@ def ml_tree_contributions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ml_refit_pruned", doc="fit → contribution-prune → refit strategy (O10/P3)")
+@query("a2_refit_pruned", doc="fit → contribution-prune → refit strategy (O10/P3)")
 def ml_refit_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.contrib import mean_abs_contributions, tree_contributions
     from ..ml.scoring import score_auc
@@ -468,7 +452,7 @@ def ml_refit_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ml_exact_shap", doc="exact TreeSHAP values (T5; Lundberg '18 Algorithm 2)")
+@query("ml_exact_shap", doc="exact TreeSHAP values (T5; Lundberg '18 Algorithm 2)")
 def ml_exact_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.contrib import tree_shap_values
 
@@ -488,8 +472,8 @@ def ml_exact_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "ml_shap_interactions",
+@query(
+    "a2_shap_interactions",
     doc="exact SHAP interaction tensor, pruned-column slice (T5 twin; "
     "reference explain.py:95-99 pred_interactions → n×(p+1)² sink)",
 )
@@ -585,8 +569,8 @@ def _kmeans_lloyd_sql(k: int, iters: int) -> str:
     )
 
 
-@_qo(
-    "ml_kmeans_lloyd",
+@query(
+    "a2_kmeans_lloyd",
     _kmeans_lloyd_sql(_KM_K, _KM_ITERS),
     doc="deterministic Lloyd k-means (fixed init/iters, exact-decimal "
     "distances) — iterative clustering under the value-hash gate",
@@ -678,7 +662,7 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return checkpoint_release(out, [emb])
 
 
-@_q("ml_kmeans_clusters", doc="MLlib KMeans over embeddings (seeded; cluster-size profile)")
+@query("a2_kmeans_clusters", doc="MLlib KMeans over embeddings (seeded; cluster-size profile)")
 def ml_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -702,8 +686,8 @@ def ml_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministically from (vec_id, pos) so the duckdb oracle is
 # integer-exact; the statistical OR-recovery validation lives in
 # tests/test_gwas.py on simulated genotypes, reference-style.
-@_qo(
-    "ml_gwas_allelic_or",
+@query(
+    "a2_gwas_allelic_or",
     f"""
     WITH g AS (
       SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS is_case,
@@ -762,8 +746,8 @@ def ml_gwas_allelic_or(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the §2 operators behind the rows-only queries get an external green row.
 
 
-@_qo(
-    "ml_cv_fold_plan",
+@query(
+    "a2_cv_fold_plan",
     """
     WITH f AS (
       SELECT (vec_id // 100) % 3 AS fold, CAST(label >= 5 AS INT) AS pos
@@ -808,8 +792,8 @@ def ml_cv_fold_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_qo(
-    "ml_shadow_invariants",
+@query(
+    "a2_shadow_invariants",
     f"""
     WITH r AS (
       SELECT generate_subscripts(embedding, 1) - 1 AS pos,
@@ -906,8 +890,8 @@ def _platt_identity_oracle(iters: int = 8) -> str:
     )
 
 
-@_qo(
-    "ml_platt_identity",
+@query(
+    "a2_platt_identity",
     _platt_identity_oracle(),
     doc="Platt-scaling deterministic core (M6/M7, reference scale.py:8-30): "
     "unpenalized 1-D logistic fit via 8 fixed Newton steps over a grouped "
@@ -1025,8 +1009,8 @@ _TS_BASE = (
 )
 
 
-@_qo(
-    "ml_treeshap_fixed",
+@query(
+    "a2_treeshap_fixed",
     f"""
     WITH pts AS (
       SELECT vec_id, {_TS_X} AS x, {_TS_Y} AS y
@@ -1085,8 +1069,8 @@ def ml_treeshap_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cell-for-cell, not just its row/matrix-sum identities.
 
 
-@_qo(
-    "ml_interactions_full",
+@query(
+    "a2_interactions_full",
     f"""
     WITH pts AS (
       SELECT vec_id, {_TS_X} AS x, {_TS_Y} AS y
@@ -1163,8 +1147,8 @@ _TS_P4 = "(20.0 * (-1.0/3.0) + 40.0 * (3.0/7.0)) / 60.0"
 _TS_P0 = f"(40.0 * ({_TS_P1}) + 60.0 * ({_TS_P4})) / 100.0"
 
 
-@_qo(
-    "ml_saabas_fixed",
+@query(
+    "a2_saabas_fixed",
     f"""
     WITH pts AS (
       SELECT vec_id, {_TS_X} AS x, {_TS_Y} AS y
@@ -1234,7 +1218,7 @@ def _hwe_chi2_sql() -> str:
     )
 
 
-@_qo(
+@query(
     "ml_hwe_filter",
     f"""
     WITH u AS (
@@ -1356,7 +1340,7 @@ def _clr2_oracle() -> str:
     """
 
 
-@_qo(
+@query(
     "ml_ld_clump_r2",
     _clr2_oracle(),
     doc="plink --clump full semantics (window AND genotype r^2 > 0.75) "
@@ -1415,7 +1399,7 @@ def ml_ld_clump_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GC_MEDIAN_1DF = 0.4549364231195724  # scipy.stats.chi2.ppf(0.5, 1), a constant
 
 
-@_qo(
+@query(
     "ml_gc_lambda",
     f"""
     WITH g AS (
@@ -1497,7 +1481,7 @@ _PRS_OR = (
 )
 
 
-@_qo(
+@query(
     "ml_prs_score",
     f"""
     WITH g AS (
@@ -1590,7 +1574,7 @@ def ml_prs_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # first-degree. Integer genotype-category counts → the φ̂ ratio is the
 # same IEEE double in both engines; the whole kinship table
 # hash-checks. The sample set is the first 12 ids (66 pairs at any sf).
-@_qo(
+@query(
     "ml_king_kinship",
     f"""
     WITH g AS (
@@ -1659,7 +1643,7 @@ def ml_king_kinship(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BOOST's per-sample bit-AND); counts partial-aggregate map-side into
 # a p²-bounded pair grid. At 215k SNPs you block the pair space
 # (SNP-range × SNP-range tiles), exactly like the KING kinship note.
-@_qo(
+@query(
     "ml_epistasis_screen",
     f"""
     WITH s AS (
@@ -1867,7 +1851,7 @@ def _meta_oracle() -> str:
     """
 
 
-@_qo(
+@query(
     "ml_meta_analysis",
     _meta_oracle(),
     doc="fixed-effect inverse-variance GWAS meta-analysis across 3 "
@@ -1937,7 +1921,7 @@ def ml_meta_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows-only by nature (pytest-pinned).
 
 
-@_qo(
+@query(
     "ml_prune_replay_fixed",
     f"""
     WITH pts AS (
@@ -2015,7 +1999,7 @@ def ml_prune_replay_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("pos")
 
 
-@_qo(
+@query(
     "ml_continuation_ladder",
     """
     WITH n AS (
@@ -2060,7 +2044,7 @@ def ml_continuation_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_qo(
+@query(
     "ml_auc_exact_audit",
     f"""
     WITH s AS (

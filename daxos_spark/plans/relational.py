@@ -18,22 +18,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_tables
-from .registry import QuerySpec, davg, dsum, register, sql_davg, sql_dsum, sql_trunc6, trunc6
-
-
-def _q(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=tags))
-        return fn
-
-    return deco
+from .registry import davg, dsum, query, sql_davg, sql_dsum, trunc6
 
 
 # --------------------------------------------------------------------------
 # q01 pricing summary — TPC-H Q1 shape. A1 group-avg (crossvalidate.py:289),
 # P6 predicate filter, partial aggregation; the canonical "wide agg" plan.
-@_q(
-    "q01_pricing_summary",
+@query(
+    "a1_pricing_summary",
     f"""
     SELECT l_returnflag, l_linestatus,
            {sql_dsum('l_quantity')} AS sum_qty,
@@ -80,8 +72,8 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q03 top-revenue — join+agg+top-k (A2 arg-best, §2.5 order/limit;
 # broadcast of the filtered customer dim).
-@_q(
-    "q03_top_revenue",
+@query(
+    "a1_top_revenue",
     f"""
     SELECT l_orderkey,
            {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue,
@@ -118,8 +110,8 @@ def q03_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q05 revenue rollup across the full dim chain (J1 broadcast chain:
 # region→nation→customer are tiny at TPC-H ratios → broadcast).
-@_q(
-    "q05_region_revenue",
+@query(
+    "a1_region_revenue",
     f"""
     SELECT r_name, n_name,
            {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue,
@@ -158,7 +150,7 @@ def q05_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q06 forecast — pure pushed-down filter + single-row agg (P6/A4 shape;
 # the filter reaches the parquet scan as PushedFilters).
-@_q(
+@query(
     "q06_forecast_revenue",
     f"""
     SELECT {sql_dsum('l_extendedprice * l_discount')} AS revenue,
@@ -189,7 +181,7 @@ def q06_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q_top_customers — join + agg + top-k by computed measure.
-@_q(
+@query(
     "q10_top_customers",
     f"""
     SELECT c_custkey, c_name,
@@ -216,8 +208,8 @@ def q10_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # semi-join row subsetting — P1/J3 (daxos/read.py:201-207 subset_hdf5_rows
 # as left_semi); oracle EXISTS.
-@_q(
-    "q_semi_join_customers",
+@query(
+    "a1_semi_join_customers",
     """
     SELECT c_custkey, c_name, c_acctbal
     FROM customer
@@ -241,8 +233,8 @@ def q_semi_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # anti-join — J4 train/test ID complement (split_ids.py:50-51 as left_anti).
-@_q(
-    "q_anti_join_customers",
+@query(
+    "a1_anti_join_customers",
     """
     SELECT c_custkey, c_name
     FROM customer
@@ -264,8 +256,8 @@ def q_anti_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q04 order-priority count via semi-join (TPC-H Q4 shape).
-@_q(
-    "q04_order_priority",
+@query(
+    "a1_order_priority",
     """
     SELECT o_orderpriority, COUNT(*) AS order_count
     FROM orders
@@ -291,8 +283,8 @@ def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact percentiles — A7/A9 (boruta.py:34 np.percentile / np.median).
 # Spark percentile() and duckdb quantile_cont share the same linear-
 # interpolation definition on identical double inputs.
-@_q(
-    "q_percentiles_by_status",
+@query(
+    "a1_percentiles_by_status",
     """
     SELECT o_orderstatus,
            quantile_cont(o_totalprice, 0.5) AS p50,
@@ -320,8 +312,8 @@ def q_percentiles_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # window top-k per group — beyond-reference window surface (§2.5 notes the
 # reference's only rank is driver-side; here it's a real distributed window).
-@_q(
-    "q_window_top3_per_cust",
+@query(
+    "a1_window_top3_per_cust",
     """
     SELECT c_custkey, o_orderkey, o_totalprice, rk
     FROM (
@@ -352,7 +344,7 @@ def q_window_top3_per_cust(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # running (cumulative) sum — window frame; exact decimal running sums so
 # both engines agree at every prefix.
-@_q(
+@query(
     "q_window_running_spend",
     """
     SELECT o_custkey, o_orderkey,
@@ -378,7 +370,7 @@ def q_window_running_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # distinct aggregation (§2.4 notes reference lacks it — beyond-parity).
-@_q(
+@query(
     "q_distinct_custs_per_priority",
     """
     SELECT o_orderpriority,
@@ -402,8 +394,8 @@ def q_distinct_custs_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame
 # --------------------------------------------------------------------------
 # UNION ALL + global arg-best — S10 read_hp_search_results
 # (crossvalidate.py:319-347): merge result sets, sort, take best row.
-@_q(
-    "q_union_argbest",
+@query(
+    "a1_union_argbest",
     """
     SELECT src, o_orderkey, o_totalprice
     FROM (
@@ -430,8 +422,8 @@ def q_union_argbest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fold assignment — X1 chunked_kfold_split (crossvalidate.py:364-395)
 # re-expressed scale-first: fold is a pure function of the key
 # (no global sort, no shuffle beyond the final groupBy).
-@_q(
-    "q_fold_assignment",
+@query(
+    "a2_fold_assignment",
     f"""
     SELECT o_orderkey % 5 AS fold,
            COUNT(*) AS n,
@@ -454,7 +446,7 @@ def q_fold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # group + HAVING — A12 MAF-filter shape (per-group mean with threshold).
-@_q(
+@query(
     "q_brand_stats_having",
     f"""
     SELECT p_brand,
@@ -479,7 +471,7 @@ def q_brand_stats_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # supplier-side join rollup (second join path through the star).
-@_q(
+@query(
     "q_supplier_nation_volume",
     f"""
     SELECT n_name,
@@ -505,7 +497,7 @@ def q_supplier_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # INTERSECT set op (§2.5: reference has none — beyond-parity).
-@_q(
+@query(
     "q_intersect_nations",
     """
     SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
@@ -524,7 +516,7 @@ def q_intersect_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # events: time-bucketed aggregation (batch twin of the streaming
 # windowed-agg operator in daxos_spark.streaming).
-@_q(
+@query(
     "q_events_hourly",
     f"""
     SELECT date_trunc('hour', ts) AS hour, event_type,
@@ -548,7 +540,7 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # events: JSON extraction from the props column (semi-structured surface).
-@_q(
+@query(
     "q_events_json_extract",
     f"""
     SELECT event_type,
@@ -576,8 +568,8 @@ def q_events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # closed-form single-covariate OLS + residual stats — the SQL-checkable
 # face of the residualization pipeline (M1-M4, daxos/deconfound.py:39-73):
 # beta/alpha from exact decimal moments, residuals per-row, aggregated.
-@_q(
-    "q_ols_residualize",
+@query(
+    "a2_ols_residualize",
     f"""
     WITH m AS (
       SELECT COUNT(*) AS n,

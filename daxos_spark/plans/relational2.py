@@ -23,13 +23,12 @@ from ..catalog import load_tables
 from ..operators.temporal import asof_join
 from .registry import (
     DEC,
-    QuerySpec,
     cache,
     checkpoint_release,
     davg,
     dsum,
     materialize,
-    register,
+    query,
     sql_davg,
     sql_dsum,
     sql_trunc6,
@@ -37,18 +36,10 @@ from .registry import (
 )
 
 
-def _q(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=tags))
-        return fn
-
-    return deco
-
-
 # --------------------------------------------------------------------------
 # TPC-H Q13 shape: LEFT OUTER join + two-level aggregation (order-count
 # distribution). The outer join keeps order-less customers (count 0).
-@_q(
+@query(
     "q13_cust_order_counts",
     """
     SELECT c_count, COUNT(*) AS custdist
@@ -81,7 +72,7 @@ def q13_cust_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # ROLLUP — hierarchical subtotals region → nation → grand total.
 # NULL grouping markers coalesced to 'ALL' identically in both engines.
-@_q(
+@query(
     "q_rollup_region_nation",
     f"""
     SELECT COALESCE(r_name, 'ALL') AS region, COALESCE(n_name, 'ALL') AS nation,
@@ -114,7 +105,7 @@ def q_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # CUBE — all grouping combinations of (status, priority).
-@_q(
+@query(
     "q_cube_status_priority",
     f"""
     SELECT COALESCE(o_orderstatus, 'ALL') AS status,
@@ -143,7 +134,7 @@ def q_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # TPC-H Q14 shape: conditional aggregation (promo revenue share).
-@_q(
+@query(
     "q14_promo_revenue",
     f"""
     SELECT {sql_trunc6(
@@ -176,7 +167,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TPC-H Q17 shape: per-group average subquery feeding a filter
 # (small-quantity orders). Spark: groupBy avg + broadcast join back —
 # no correlated-subquery re-execution, one pass each.
-@_q(
+@query(
     "q17_small_qty_revenue",
     f"""
     WITH pa AS (
@@ -208,7 +199,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # TPC-H Q18 shape: HAVING on a big aggregation, join back to dims, top-k.
-@_q(
+@query(
     "q18_large_orders",
     f"""
     SELECT c_name, o_orderkey, o_orderdate, o_totalprice,
@@ -243,7 +234,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # TPC-H Q19 shape: OR-of-ANDs predicate pushed into one scan+join.
-@_q(
+@query(
     "q19_or_predicates",
     f"""
     SELECT {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue,
@@ -271,8 +262,8 @@ def q19_or_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # TPC-H Q22 shape: scalar subquery threshold + anti join (rich customers
 # with no orders).
-@_q(
-    "q22_idle_rich_customers",
+@query(
+    "a1_idle_rich_customers",
     f"""
     WITH avg_bal AS (
       SELECT {sql_davg('c_acctbal')} AS ab FROM customer WHERE c_acctbal > 0.0
@@ -303,7 +294,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # TPC-H Q7 shape: bilateral trade volume between nation pairs by year.
-@_q(
+@query(
     "q07_nation_trade_pairs",
     f"""
     SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
@@ -346,7 +337,7 @@ def q07_nation_trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # TPC-H Q9 shape: profit by supplier nation and year (5-table join;
 # revenue minus a part-cost proxy since there is no partsupp table).
-@_q(
+@query(
     "q09_profit_by_nation_year",
     f"""
     SELECT n_name AS nation, EXTRACT(year FROM o_orderdate) AS o_year,
@@ -381,7 +372,7 @@ def q09_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # TPC-H Q15 shape: top supplier(s) by revenue = scalar-subquery max.
-@_q(
+@query(
     "q15_top_supplier",
     f"""
     WITH rev AS (
@@ -420,7 +411,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # correlated scalar subquery — parts above their brand's average price.
 # Spark: window avg (one shuffle) instead of subquery re-execution.
-@_q(
+@query(
     "q_corr_above_brand_avg",
     f"""
     WITH b AS (
@@ -466,7 +457,7 @@ def q_corr_above_brand_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
 
 
-@_q(
+@query(
     "q_pivot_status_priority",
     f"""
     SELECT o_orderstatus AS status,
@@ -496,8 +487,8 @@ def q_pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 'click' by the same user. Spark side: union+window (operators/
 # temporal.asof_join — one shuffle on user_id, no join fan-out).
 # Oracle: duckdb native ASOF LEFT JOIN. Output aggregated per user.
-@_q(
-    "q_asof_click_before_error",
+@query(
+    "a1_asof_click_before_error",
     f"""
     WITH e AS (
       SELECT user_id, ts, event_id FROM events WHERE event_type = 'error'
@@ -539,7 +530,7 @@ def q_asof_click_before_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # range (band) join — views within 5 minutes after each error, per user.
 # Equi-join on the entity key + time-band filter; at scale, bucket both
 # sides by coarse time so the band prunes buckets (partition pruning).
-@_q(
+@query(
     "q_range_views_after_error",
     """
     SELECT e.user_id,
@@ -580,7 +571,7 @@ def q_range_views_after_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # TPC-H Q2 shape: min-within-group + semi join back (cheapest supplier
 # per part, via lineitem since there is no partsupp table).
-@_q(
+@query(
     "q02_min_cost_supplier",
     """
     WITH costs AS (
@@ -624,7 +615,7 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NULL semantics — NULLIF-produced nulls through aggregates, COALESCE,
 # and null-safe counting. (Engine row order is irrelevant to the gate's
 # hash; what must agree is the NULL arithmetic itself.)
-@_q(
+@query(
     "q_null_semantics",
     """
     WITH n AS (
@@ -663,7 +654,7 @@ def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # string-function surface — substr/upper/replace/concat/lpad/length over
 # customer names (ASCII-deterministic in both engines).
-@_q(
+@query(
     "q_string_funcs",
     """
     WITH s AS (
@@ -706,7 +697,7 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # datetime-function surface — extract/trunc/diff arithmetic on orders.
-@_q(
+@query(
     "q_datetime_funcs",
     """
     WITH d AS (
@@ -752,7 +743,7 @@ def q_datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # TPC-H Q8 shape: market share — conditional share of a group within a
 # larger aggregate, per year.
-@_q(
+@query(
     "q08_market_share",
     f"""
     WITH rev AS (
@@ -792,8 +783,8 @@ def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # sliding-frame window — 4-row moving sum + lag delta per customer
 # (ROWS BETWEEN frames; exact decimal arithmetic inside the frame).
-@_q(
-    "q_window_moving_sum",
+@query(
+    "a1_window_moving_sum",
     """
     SELECT o_custkey, o_orderkey,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6)))
@@ -832,7 +823,7 @@ def q_window_moving_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..functions.hashing import md5_long, md5_long_sql  # noqa: E402
 
 
-@_q(
+@query(
     "q_hash_sample",
     f"""
     SELECT o_orderstatus,
@@ -857,7 +848,7 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # time-spine gap fill — generate the full hour spine per event_type and
 # left-join observed counts so silent hours appear as zeros (the
 # resample/interpolate pattern every time-series pipeline needs).
-@_q(
+@query(
     "q_hourly_gap_fill",
     """
     WITH bounds AS (
@@ -915,7 +906,7 @@ def q_hourly_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # data profiling — the ANALYZE-style per-column stats pass (null count,
 # distinct count, min/max) every warehouse runs before planning.
-@_q(
+@query(
     "q_profile_lineitem",
     """
     SELECT 'l_quantity' AS col, COUNT(*) AS n, COUNT(l_quantity) AS n_notnull,
@@ -954,7 +945,7 @@ def q_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # quantile binning — NTILE discretization + per-bin stats.
-@_q(
+@query(
     "q_ntile_spend_quartiles",
     f"""
     WITH b AS (
@@ -986,7 +977,7 @@ def q_ntile_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Pearson correlation from exact decimal moments — engine-native corr()
 # accumulates in engine-specific order; the moment formula is
 # order-independent and bit-identical in both engines.
-@_q(
+@query(
     "q_corr_price_qty",
     f"""
     WITH m AS (
@@ -1022,7 +1013,7 @@ def q_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # null-safe equality join — <=> (IS NOT DISTINCT FROM): null keys match
 # each other, unlike plain = which drops them.
-@_q(
+@query(
     "q_null_safe_join",
     """
     WITH a AS (
@@ -1052,7 +1043,7 @@ def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # TPC-H Q16 shape: distinct supplier variety per part attribute, via
 # the lineitem bridge (no partsupp table in this schema).
-@_q(
+@query(
     "q16_supplier_variety",
     """
     SELECT p_type, p_size,
@@ -1080,7 +1071,7 @@ def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # array aggregation + ops — ordered collect, slice, membership; arrays
 # serialized to strings so the cross-engine hash sees identical cells.
-@_q(
+@query(
     "q_array_ops",
     """
     WITH a AS (
@@ -1115,7 +1106,7 @@ def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # FULL OUTER join — nations present on the customer side, the supplier
 # side, both, or neither side's filtered subset.
-@_q(
+@query(
     "q_full_outer_nation_presence",
     """
     WITH c AS (
@@ -1158,7 +1149,7 @@ def q_full_outer_nation_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # EXCEPT set op — completes the set-operator family (UNION/INTERSECT
 # elsewhere).
-@_q(
+@query(
     "q_except_nations",
     """
     SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
@@ -1189,7 +1180,7 @@ def q_except_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # fixed-width histogram — deterministic binning (the exact-histogram
 # sketch; width_bucket/floor arithmetic identical in both engines).
-@_q(
+@query(
     "q_price_histogram",
     """
     SELECT CAST(FLOOR(o_totalprice / 50000.0) AS BIGINT) AS bin,
@@ -1214,7 +1205,7 @@ def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct suppliers with at least one from the target nation —
 # multi-correlation via one aggregation instead of EXISTS/NOT EXISTS
 # re-execution.
-@_q(
+@query(
     "q21_multi_supplier_orders",
     """
     WITH per_order AS (
@@ -1268,7 +1259,7 @@ def q21_multi_supplier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact DECIMAL (order-independent); the single decimal→double
 # conversion per value is identical in both engines, and the IEEE
 # compare of identical doubles matches (1.5 is exactly representable).
-@_q(
+@query(
     "q11_important_parts",
     """
     WITH nation_parts AS (
@@ -1323,7 +1314,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # priority mix. Line items shipped >60 days after order date, grouped
 # by line status, counting high- vs low-priority orders — the classic
 # conditional-aggregation-after-join shape.
-@_q(
+@query(
     "q12_late_shipment_priority",
     """
     SELECT l_linestatus AS linestatus,
@@ -1360,7 +1351,7 @@ def q12_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whose inner query is itself an aggregation with a global-average
 # threshold. Supplier-side tables are tiny → everything after the one
 # lineitem agg is broadcast.
-@_q(
+@query(
     "q20_excess_suppliers",
     """
     WITH sp AS (
@@ -1414,7 +1405,7 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark expands grouping sets map-side into a single Expand + one
 # shuffle — strictly cheaper than a UNION ALL of separate groupBys,
 # which would scan orders twice.
-@_q(
+@query(
     "q_grouping_sets",
     """
     SELECT COALESCE(o_orderstatus, '«all»') AS status,
@@ -1458,7 +1449,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row_number/lag/sum windows elsewhere. One shuffle on o_custkey; every
 # window shares the same partitioning so Spark plans a single Window
 # operator chain without re-exchange.
-@_q(
+@query(
     "q_window_value_funcs",
     """
     WITH w AS (
@@ -1516,7 +1507,7 @@ def q_window_value_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # element_at (NULL on missing key) and size. The oracle computes the
 # same VALUES relationally — what must agree is the map lookup/NULL
 # semantics, not the representation. One shuffle (user_id).
-@_q(
+@query(
     "q_map_ops",
     """
     SELECT user_id,
@@ -1556,7 +1547,7 @@ def q_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (status, metric, value) form — the inverse of q_pivot_status_priority.
 # Spark's unpivot is a zero-shuffle Expand over the aggregated rows;
 # the oracle spells it as UNION ALL.
-@_q(
+@query(
     "q_unpivot_status_metrics",
     """
     WITH w AS (
@@ -1596,7 +1587,7 @@ def q_unpivot_status_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # time-series feature pipelines. One window pass over the spine
 # (IGNORE NULLS last/first_value) — no per-gap joins; at scale the
 # spine is per-series and the window partitions by series key.
-@_q(
+@query(
     "q_resample_interpolate",
     """
     WITH src AS (
@@ -1696,7 +1687,7 @@ def q_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two-arg pivot's hidden extra scan); the oracle is the equivalent
 # CASE-WHEN conditional aggregation, which is also exactly what the
 # pivot compiles to — no shuffle beyond the one groupBy exchange.
-@_q(
+@query(
     "q_pivot_status_counts",
     """
     SELECT o_orderpriority,
@@ -1736,7 +1727,7 @@ def q_pivot_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partial-aggregable pass (each executor keeps one champion per group).
 # Ties broken deterministically by keying the comparator with the
 # (value, -key) struct so both engines pick the same row.
-@_q(
+@query(
     "q_argmax_per_status",
     """
     WITH r AS (
@@ -1781,7 +1772,7 @@ def q_argmax_per_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (window, event_type); the oracle unnests the same two hour-aligned
 # starts per row. At 100 TB slide/duration set the fan-out factor, and
 # watermarking bounds the same operator's state in the streaming twin.
-@_q(
+@query(
     "q_events_sliding_counts",
     f"""
     WITH w AS (
@@ -1812,7 +1803,7 @@ def q_events_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # keys, all in one pass over each table. At scale each check is a
 # broadcast/shuffle anti-join or a keyed count — no collect, and AQE
 # picks the join strategy per relation size.
-@_q(
+@query(
     "q_referential_integrity",
     """
     SELECT
@@ -1905,7 +1896,7 @@ def _pagerank_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "q_trade_pagerank",
     _pagerank_oracle(),
     doc="PageRank (3 damped iterations) over the bidirectional "
@@ -1966,7 +1957,7 @@ def q_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are closed-form arithmetic on those identical numbers, so z and t
 # hash-check to 6 decimals. At 100 TB this is two shuffles (user
 # rollup, arm rollup), both with map-side partial aggregation.
-@_q(
+@query(
     "q_ab_ztest",
     f"""
     WITH pu AS (
@@ -2119,7 +2110,7 @@ def _copurchase_edges(li: DataFrame) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "q_copurchase_triangles",
     f"""
     WITH e AS ({_COPURCHASE_EDGES_CTE}
@@ -2200,7 +2191,7 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LP_MAXDEG = 64
 
 
-@_q(
+@query(
     "q_link_prediction",
     f"""
     WITH e AS ({_COPURCHASE_EDGES_CTE}
@@ -2287,7 +2278,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the delta is hours of data, the base agg is key-cardinality, and the
 # corpus is never re-scanned (exactly the d_incremental_dedup argument
 # applied to aggregation).
-@_q(
+@query(
     "q_ivm_merge_proof",
     f"""
     WITH cut AS (
@@ -2382,7 +2373,7 @@ def q_ivm_merge_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ATTR_WINDOW_US = 30 * 60 * 1_000_000
 
 
-@_q(
+@query(
     "q_touch_attribution",
     f"""
     WITH ev AS (
@@ -2467,7 +2458,7 @@ def q_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reach for when AQE's skew split is not enough (a single key carrying
 # a double-digit share of the fact table); registering it makes the
 # equality externally checked every round, not just unit-tested.
-@_q(
+@query(
     "q_salted_join_check",
     f"""
     SELECT o_orderpriority,
@@ -2510,7 +2501,7 @@ def q_salted_join_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # column at bronze→silver and every downstream read is a typed extract
 # against the binary encoding. Values identical to duckdb's JSON
 # extraction on the same strings, so the rollup hash-checks.
-@_q(
+@query(
     "q_variant_shred",
     f"""
     SELECT event_type,
@@ -2554,7 +2545,7 @@ def q_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_hourly_gap_fill pattern; the MA is one ordered window per series
 # (partition by series key at scale, exactly like the interpolation
 # queries).
-@_q(
+@query(
     "q_seasonal_decompose",
     f"""
     WITH bounds AS (
@@ -2638,7 +2629,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 # threshold h = 4·sqrt(k). Both windows accumulate in the same ORDER BY
 # in both engines, so the excursion values and alarm counts hash-check.
 # Partition by series key at scale (this corpus is one series).
-@_q(
+@query(
     "q_cusum_drift",
     f"""
     WITH bounds AS (
@@ -2717,7 +2708,7 @@ def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash-checked. One scan + a 9-row aggregate; the synthetic uniform
 # prices here FAIL Benford loudly (huge chi²), which is exactly what
 # the audit should say about them.
-@_q(
+@query(
     "q_benford_audit",
     f"""
     WITH d AS (
@@ -2781,7 +2772,7 @@ _EWMA_ALPHA = 0.3
 _EWMA_WIN = 48
 
 
-@_q(
+@query(
     "q_ewma_forecast",
     f"""
     WITH bounds AS (
@@ -2877,7 +2868,7 @@ def q_ewma_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integers; confidence and lift are ratios of identical integers
 # emitted in exact micro units, so the whole rule table hash-checks.
 # Same Σw² pair-join bound as the co-occurrence query.
-@_q(
+@query(
     "q_basket_rules",
     """
     WITH op AS (
@@ -2970,7 +2961,7 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ranks (row_number with a deterministic id tie-break — documented
 # simplification vs average-ties ranks), then the closed form
 # ρ = 1 − 6Σd²/(n(n²−1)) on exact integers: fully hash-checked.
-@_q(
+@query(
     "q_spearman_orders_spend",
     f"""
     WITH per_cust AS (
@@ -3035,7 +3026,7 @@ def q_spearman_orders_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # counts of src0 vs src1 (the ingest-shift question). The 0.05
 # rejection bound 1.36·sqrt((n1+n2)/(n1·n2)) is evaluated on identical
 # doubles.
-@_q(
+@query(
     "q_ks_length_shift",
     f"""
     WITH s AS (
@@ -3174,7 +3165,7 @@ _REACH_RECURSE_SQL = "WITH RECURSIVE " + _REACH_TAIL_SQL.format(
 )
 
 
-@_q(
+@query(
     "q_recursive_trade_reach",
     _REACH_SQL,
     doc="Spark-4 WITH RECURSIVE: min-hop reachability from the hub "
@@ -3226,7 +3217,7 @@ ORDER BY c.c_custkey, o_totalprice_micro DESC, o_orderkey
 """
 
 
-@_q(
+@query(
     "q_lateral_topk",
     _LATERAL_SQL,
     doc="LATERAL correlated subquery: top-2 orders per customer as a "
@@ -3250,7 +3241,7 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lineitem joins on orderkey (shuffle); both predicates reach the scans
 # (date + segment pushdown), and the top-10 is a TakeOrdered — no
 # global sort materialization.
-@_q(
+@query(
     "q03_unshipped_priority",
     f"""
     SELECT l_orderkey,
@@ -3301,7 +3292,7 @@ def q03_unshipped_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # average so both engines select the identical customer set.
 # Scale: the threshold is a 1-row broadcast (cross join), the NOT EXISTS
 # is a left-anti shuffle join on custkey — no correlated re-execution.
-@_q(
+@query(
     "q22_dormant_rich_nations",
     f"""
     WITH thresh AS (
@@ -3380,7 +3371,7 @@ _KMV_EST_UNION_SQL = (
 )
 
 
-@_q(
+@query(
     "q_kmv_set_ops",
     f"""
     WITH li AS (
@@ -3479,7 +3470,7 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: two shuffles on the group key (exact medians sort per group);
 # at 100 TB swap percentile() → approx_percentile() (t-digest,
 # map-side combinable, one shuffle) and keep the same rule.
-@_q(
+@query(
     "q_mad_outliers",
     f"""
     WITH med AS (
@@ -3586,7 +3577,7 @@ def _boot_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "q_poisson_bootstrap",
     _boot_oracle(),
     doc=f"Poisson bootstrap 95% CI for mean order value: {_BOOT_B} "
@@ -3655,7 +3646,7 @@ def q_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CUPED_CUT = "2024-01-16"
 
 
-@_q(
+@query(
     "q_cuped_adjust",
     f"""
     WITH pu AS (
@@ -3781,7 +3772,7 @@ def q_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (decimal moments), τ² = σ² (unit-information mixture).
 # Scale: one (day, arm) aggregate (map-side combinable), a 30-row
 # cumulative window, scalar math — the fact scan happens once.
-@_q(
+@query(
     "q_msprt_monitor",
     f"""
     WITH ud AS (
@@ -3886,7 +3877,7 @@ def q_msprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # statistic is exact (rank over the calibration residuals — at 100 TB
 # swap to approx_percentile exactly as the MAD docstring notes; the
 # conformal guarantee degrades gracefully with quantile error).
-@_q(
+@query(
     "q_conformal_interval",
     f"""
     WITH base AS (
@@ -4021,7 +4012,7 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One user-keyed aggregate → arm-keyed decimal moments → scalar math;
 # every output is a deterministic double through identical expression
 # text, no window, no join beyond the 2-row arm pivot.
-@_q(
+@query(
     "q_srm_balance",
     f"""
     WITH pu AS (
@@ -4117,7 +4108,7 @@ def q_srm_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PSI_CUT = "1998-07-01"
 
 
-@_q(
+@query(
     "q_psi_drift",
     f"""
     WITH base AS (
@@ -4210,7 +4201,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the orders checks share one scan via conditional aggregation; the
 # uniqueness check is a two-level count; referential integrity is a
 # left-anti count on the join key).
-@_q(
+@query(
     "q_constraint_suite",
     """
     WITH o_scan AS (
@@ -4304,7 +4295,7 @@ def q_constraint_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # identical downstream math.
 # Scale: one conditional-count aggregate on the part key (map-side
 # combinable), top-20 via TakeOrdered — no global sort, no join.
-@_q(
+@query(
     "q_heavy_change",
     f"""
     WITH c AS (
@@ -4386,7 +4377,7 @@ def _acf_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "q_acf_revenue",
     _acf_oracle(),
     doc="autocorrelation of the daily revenue series at lags 1..7 "
@@ -4440,7 +4431,7 @@ def q_acf_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # single sort with binned ranks (fixed price histogram -> per-bin
 # offsets, q_price_histogram machinery) — the U statistic only needs
 # rank SUMS, which bin offsets reconstruct exactly for distinct bins.
-@_q(
+@query(
     "q_mann_whitney",
     f"""
     WITH s AS (
@@ -4530,7 +4521,7 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 # first (~2.4k rows/7 years), so the unpartitioned window ranks a
 # tiny relation — the same altitude argument as q_cusum_drift /
 # q_seasonal_decompose (PLANS.md window audit table).
-@_q(
+@query(
     "q_changepoint_revenue",
     f"""
     WITH day AS (
@@ -4639,7 +4630,7 @@ def q_changepoint_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WM_BATCH = 1000
 
 
-@_q(
+@query(
     "q_watermark_lateness",
     f"""
     WITH e AS (
@@ -4750,7 +4741,7 @@ def _kcore_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "q_kcore_decomposition",
     _kcore_oracle(),
     doc=f"k-core peel (k={_KCORE_K}, Seidman '83) of the >=2-order "
@@ -4835,7 +4826,7 @@ def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HDR_QS = (("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))  # name, num, den
 
 
-@_q(
+@query(
     "q_hdr_latency",
     f"""
     WITH ev AS (
@@ -5045,7 +5036,7 @@ def _lp_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "q_label_propagation",
     _lp_oracle(),
     doc=f"synchronous label propagation ({_LP_ROUNDS} rounds, most-"
@@ -5142,7 +5133,7 @@ WHERE rk <= 2
 """
 
 
-@_q(
+@query(
     "q_trade_shortest_path",
     f"""
     WITH RECURSIVE edges AS ({_SSSP_EDGES_SQL}),

@@ -14,24 +14,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_tables
-from .registry import QuerySpec, register
+from .registry import query
 
 _GAP_MIN = 30
-
-
-def _q(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=("streaming",)))
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------
 # session windows — Spark session_window (merge when the next event
 # starts strictly inside prev window, i.e. same session iff gap < 30m).
 # Oracle: gaps-and-islands with new-session flag at diff >= 30m.
-@_q(
+@query(
     "q_session_stats",
     f"""
     WITH s AS (
@@ -87,7 +79,7 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # event-type transition counts — LAG over per-user time order (the
 # sequence-analytics shape streaming state machines compute).
-@_q(
+@query(
     "q_event_transitions",
     """
     WITH s AS (

@@ -35,17 +35,9 @@ from ..functions.url import (
     url_rule_steps_sql,
 )
 from .docpipe import _fanout
-from .registry import QuerySpec, materialize, register, sql_trunc6, trunc6
+from .registry import materialize, query, sql_trunc6, trunc6
 
 ALL = {}
-
-
-def _q(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=("url",)))
-        return fn
-
-    return deco
 
 
 _N_ART = 211  # articles (prime → uneven snapshot families at any SF)
@@ -118,7 +110,7 @@ def _url_canonical_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "t_url_canonical",
     _url_canonical_oracle(),
     doc="URL canonicalization rule-fire census: the four rule families "
@@ -161,7 +153,7 @@ _CANON_SQL = sql_url_canonical("url")
 _CANON_SPARK = url_canonical_sqlexpr("url")
 
 
-@_q(
+@query(
     "t_url_dedup",
     f"""
     WITH {_snap_sql()}, c AS (
@@ -204,7 +196,7 @@ def t_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # convention): raw URL equality finds only same-variant refetches;
 # canonical equality recovers the full cross-variant families. The
 # measured justification for canonicalizing before URL dedup.
-@_q(
+@query(
     "t_url_dedup_recovery",
     f"""
     WITH {_snap_sql()}, c AS (
@@ -1517,131 +1509,99 @@ def _register_ingest():
 
     global _META_RE_SQL
     _META_RE_SQL = _META_ROBOTS_RE
-    register(
-        QuerySpec(
-            name="t_ingest_e2e",
-            spark=_ingest_e2e_impl,
-            oracle=_ingest_oracle(),
-            doc="the COMPLETE crawl-ingest pipeline as one plan, in the "
-            "only cost-correct stage order: URL-level dedup (keep latest "
-            "per canonical key — cheapest, before any content byte) -> "
-            "robots/opt-out gate (regex on raw bytes) -> main-content "
-            "extraction (the expensive HOF chain, only on deduped "
-            "compliant pages) -> Gopher quality; every stage is the "
-            "standalone query's exact machinery; per-stage doc + char mass",
-            tags=("url",),
-        )
-    )
-    register(
-        QuerySpec(
-            name="t_ingest_delta",
-            spark=_ingest_delta_impl,
-            oracle=_ingest_delta_oracle(),
-            doc="incremental crawl ingest: a day's snapshot batch merges "
-            "into the committed canonical-URL index — per-URL verdicts "
-            "(new / newer refetch / stale refetch), pages that must pay "
-            "extraction vs a full recompute, and an in-query md5-lane "
-            "digest PROVING the merged index equals the from-scratch "
-            "recompute (the hash gate pins incremental==full at every SF); "
-            "classify join shuffles only batch mass to the index "
-            "partitioning — day-bounded cost, never corpus-bounded",
-            tags=("url",),
-        )
-    )
-    register(
-        QuerySpec(
-            name="t_ingest_epochs",
-            spark=_ingest_epochs_impl,
-            oracle=_ingest_epochs_oracle(),
-            doc="multi-epoch fold of the incremental ingest merge: TWO "
-            "consecutive delta days folded into the committed index, "
-            "per-epoch verdict censuses (every class exercised both "
-            "days), and an in-query md5-lane digest proving "
-            "merge(merge(idx0, day1), day2) == full recompute — the "
-            "composition-closure half of the incremental-maintenance "
-            "correctness argument (t_ingest_delta proves one step)",
-            tags=("url",),
-        )
-    )
-    register(
-        QuerySpec(
-            name="t_host_yield",
-            spark=_host_yield_impl,
-            oracle=_host_yield_oracle(),
-            doc="per-host crawl economics census: snapshot mass -> "
-            "canonical pages -> opt-out-compliant -> extraction "
-            "survivors -> Gopher survivors per canonical host, with "
-            "extracted char mass and survivors-per-fetch yield — the "
-            "numbers a crawler reallocates fetch budget by; shared "
-            "ingest machinery, two host-keyed partial aggregates",
-            tags=("url",),
-        )
-    )
-    register(
-        QuerySpec(
-            name="t_crawl_budget",
-            spark=_crawl_budget_impl,
-            oracle=_crawl_budget_oracle(),
-            doc="crawl-budget apportionment: a fixed next-epoch fetch "
-            "budget divided across hosts in proportion to Gopher yield "
-            "(weight = n_gopher + 1, the exploration floor) by integer "
-            "largest-remainder (Hamilton) apportionment — base = B*w "
-            "div W, leftover seats to the largest remainders, host-name "
-            "tiebreak; ENTIRELY integer arithmetic so both engines "
-            "allocate bit-identically and sum(alloc) == B exactly "
-            "(total_alloc column is the in-query self-check)",
-            tags=("url",),
-        )
-    )
-    register(
-        QuerySpec(
-            name="t_manifest_diff",
-            spark=_manifest_diff_impl,
-            oracle=_manifest_diff_oracle(),
-            doc="corpus-version manifest diff: committed vs post-delta "
-            "keep-sets sharded by the t_shard_manifest convention "
-            "(md5 mod 16 + residue checksum) — per shard both versions' "
-            "doc counts and checksums, docs added/removed by the delta, "
-            "and a changed flag; the reproducible-sink economics (an "
-            "incremental day rewrites ONLY changed shards); "
-            "conservation: sum(added) == pages_to_extract, "
-            "sum(removed) == refetch_newer",
-            tags=("url",),
-        )
-    )
-    register(
-        QuerySpec(
-            name="t_robots_txt",
-            spark=t_robots_txt,
-            oracle=_robots_gate_oracle(),
-            doc="robots.txt path gate (the per-HOST half of the robots "
-            "story, alongside t_optout_gate's per-page meta tags): "
-            "deterministic per-host robots.txt synthesis (three policy "
-            "archetypes), REAL multiline Disallow-line parse "
-            "(regexp_extract_all, shared RE2/Java constant), canonical "
-            "URL path prefix-matched against the host's parsed prefixes "
-            "via an exists() HOF; per-host blocked/allowed census — "
-            "robots.txt is per-host broadcast-shaped data joined on the "
-            "URL store's partition key",
-            tags=("url",),
-        )
-    )
-    register(
-        QuerySpec(
-            name="t_frontier_e2e",
-            spark=_frontier_e2e_impl,
-            oracle=_frontier_oracle(),
-            doc="t_ingest_e2e extended one stage UPSTREAM with the "
-            "robots.txt path gate in its true PRE-FETCH position: "
-            "robots.txt frontier gate -> URL-level dedup -> per-page "
-            "meta/opt-out gate -> extraction -> Gopher, one plan, "
-            "per-stage doc + char mass; the complete crawl governance "
-            "order (a disallowed path never costs a fetch, a duplicate "
-            "URL never costs a byte, a non-compliant page never costs "
-            "extraction)",
-            tags=("url",),
-        )
-    )
+    query(
+        "t_ingest_e2e",
+        _ingest_oracle(),
+        doc="the COMPLETE crawl-ingest pipeline as one plan, in the "
+        "only cost-correct stage order: URL-level dedup (keep latest "
+        "per canonical key — cheapest, before any content byte) -> "
+        "robots/opt-out gate (regex on raw bytes) -> main-content "
+        "extraction (the expensive HOF chain, only on deduped "
+        "compliant pages) -> Gopher quality; every stage is the "
+        "standalone query's exact machinery; per-stage doc + char mass",
+    )(_ingest_e2e_impl)
+    query(
+        "t_ingest_delta",
+        _ingest_delta_oracle(),
+        doc="incremental crawl ingest: a day's snapshot batch merges "
+        "into the committed canonical-URL index — per-URL verdicts "
+        "(new / newer refetch / stale refetch), pages that must pay "
+        "extraction vs a full recompute, and an in-query md5-lane "
+        "digest PROVING the merged index equals the from-scratch "
+        "recompute (the hash gate pins incremental==full at every SF); "
+        "classify join shuffles only batch mass to the index "
+        "partitioning — day-bounded cost, never corpus-bounded",
+    )(_ingest_delta_impl)
+    query(
+        "t_ingest_epochs",
+        _ingest_epochs_oracle(),
+        doc="multi-epoch fold of the incremental ingest merge: TWO "
+        "consecutive delta days folded into the committed index, "
+        "per-epoch verdict censuses (every class exercised both "
+        "days), and an in-query md5-lane digest proving "
+        "merge(merge(idx0, day1), day2) == full recompute — the "
+        "composition-closure half of the incremental-maintenance "
+        "correctness argument (t_ingest_delta proves one step)",
+    )(_ingest_epochs_impl)
+    query(
+        "t_host_yield",
+        _host_yield_oracle(),
+        doc="per-host crawl economics census: snapshot mass -> "
+        "canonical pages -> opt-out-compliant -> extraction "
+        "survivors -> Gopher survivors per canonical host, with "
+        "extracted char mass and survivors-per-fetch yield — the "
+        "numbers a crawler reallocates fetch budget by; shared "
+        "ingest machinery, two host-keyed partial aggregates",
+    )(_host_yield_impl)
+    query(
+        "t_crawl_budget",
+        _crawl_budget_oracle(),
+        doc="crawl-budget apportionment: a fixed next-epoch fetch "
+        "budget divided across hosts in proportion to Gopher yield "
+        "(weight = n_gopher + 1, the exploration floor) by integer "
+        "largest-remainder (Hamilton) apportionment — base = B*w "
+        "div W, leftover seats to the largest remainders, host-name "
+        "tiebreak; ENTIRELY integer arithmetic so both engines "
+        "allocate bit-identically and sum(alloc) == B exactly "
+        "(total_alloc column is the in-query self-check)",
+    )(_crawl_budget_impl)
+    query(
+        "t_manifest_diff",
+        _manifest_diff_oracle(),
+        doc="corpus-version manifest diff: committed vs post-delta "
+        "keep-sets sharded by the t_shard_manifest convention "
+        "(md5 mod 16 + residue checksum) — per shard both versions' "
+        "doc counts and checksums, docs added/removed by the delta, "
+        "and a changed flag; the reproducible-sink economics (an "
+        "incremental day rewrites ONLY changed shards); "
+        "conservation: sum(added) == pages_to_extract, "
+        "sum(removed) == refetch_newer",
+    )(_manifest_diff_impl)
+    query(
+        "t_robots_txt",
+        _robots_gate_oracle(),
+        doc="robots.txt path gate (the per-HOST half of the robots "
+        "story, alongside t_optout_gate's per-page meta tags): "
+        "deterministic per-host robots.txt synthesis (three policy "
+        "archetypes), REAL multiline Disallow-line parse "
+        "(regexp_extract_all, shared RE2/Java constant), canonical "
+        "URL path prefix-matched against the host's parsed prefixes "
+        "via an exists() HOF; per-host blocked/allowed census — "
+        "robots.txt is per-host broadcast-shaped data joined on the "
+        "URL store's partition key",
+    )(t_robots_txt)
+    query(
+        "t_frontier_e2e",
+        _frontier_oracle(),
+        doc="t_ingest_e2e extended one stage UPSTREAM with the "
+        "robots.txt path gate in its true PRE-FETCH position: "
+        "robots.txt frontier gate -> URL-level dedup -> per-page "
+        "meta/opt-out gate -> extraction -> Gopher, one plan, "
+        "per-stage doc + char mass; the complete crawl governance "
+        "order (a disallowed path never costs a fetch, a duplicate "
+        "URL never costs a byte, a non-compliant page never costs "
+        "extraction)",
+    )(_frontier_e2e_impl)
 
 
 _META_RE_SQL = ""

@@ -23,25 +23,17 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_tables
 from ..functions.vectors import cosine, dot, l2_norm, to_double
-from .registry import QuerySpec, register, sql_trunc6, trunc6
+from .registry import query, sql_trunc6, trunc6
 
 _COS = (
     "list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))"
 )
 
 
-def _q(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=("vectors",)))
-        return fn
-
-    return deco
-
-
 # --------------------------------------------------------------------------
 # brute-force cosine top-5 — ints only in the output (ranks, not scores)
 # so the hash-compare is float-proof.
-@_q(
+@query(
     "e_knn_bruteforce",
     f"""
     WITH q AS (
@@ -87,7 +79,7 @@ def e_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # per-label centroids — posexplode + exact decimal mean per (label, pos);
 # the building block for IVF bucketing and k-means.
-@_q(
+@query(
     "e_label_centroids",
     f"""
     WITH u AS (
@@ -118,7 +110,7 @@ def e_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # norm statistics per label — per-row L2 norm then exact-decimal mean.
-@_q(
+@query(
     "e_norm_stats",
     f"""
     WITH n AS (
@@ -151,7 +143,7 @@ def e_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # embedding-cosine near-dup summary — all-pairs at correctness scale;
 # the LSH/IVF bucketed variant is the production path.
-@_q(
+@query(
     "e_cosine_neardup_count",
     f"""
     WITH v AS (
@@ -196,7 +188,7 @@ _IVF_COS = (
 )
 
 
-@_q(
+@query(
     "e_knn_ivf",
     f"""
     WITH corpus AS (
@@ -254,7 +246,7 @@ def e_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF recall vs exact top-k — the ANN quality measurement: per query,
 # how many of the exact top-5 the probed search recovered. Both sides
 # deterministic, so recall itself is hash-checkable.
-@_q(
+@query(
     "e_knn_recall",
     f"""
     WITH corpus AS (
@@ -344,7 +336,7 @@ def e_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash-checked, not just row counts. One stats pass + broadcast of the
 # (1-row) quantization params; scoring is the same embarrassingly
 # parallel scan as e_knn_bruteforce but on codes.
-@_q(
+@query(
     "e_sq_knn",
     """
     WITH corpus AS (
@@ -507,7 +499,7 @@ def _lsh_oracle() -> str:
     """
 
 
-@_q("e_knn_lsh", _lsh_oracle())
+@query("e_knn_lsh", _lsh_oracle())
 def e_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.similarity import int_code, lsh_bucket, lsh_planes, lsh_probe_buckets
 
@@ -556,11 +548,10 @@ def e_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (8 bytes of code per vector instead of 256 bytes of floats).
 # Exact-decimal subdistances make assignment, lookup, and ranking
 # bit-identical in both engines → full value-hash check.
-_PQ_M = 8  # subvectors (64 dims / 8 per group)
 _PQ_K = 16  # codebook size per subvector
 
 
-@_q(
+@query(
     "e_pq_knn",
     f"""
     WITH u AS (
@@ -704,7 +695,7 @@ def e_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # n-gram matching misses). The benchmark side is small by definition →
 # broadcast; the corpus scan stays linear and the per-label summary is
 # one agg. Same identical-double cosine as e_knn_bruteforce.
-@_q(
+@query(
     "e_embed_decontam",
     f"""
     WITH bench AS (

@@ -42,17 +42,9 @@ from ..functions.hashing import md5_long_sql
 from ..functions.similarity import int_code
 from ..functions.vectors import dot, l2_norm, to_double
 from .docpipe import _fanout
-from .registry import QuerySpec, cache, checkpoint_release, register, sql_trunc6, trunc6
+from .registry import cache, checkpoint_release, query, sql_trunc6, trunc6
 
 _DIM = 64
-
-
-def _q(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        register(QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc, tags=("vectors",)))
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------
@@ -60,7 +52,7 @@ def _q(name: str, oracle: str | None, doc: str = ""):
 _CODE_SQL = "list_transform(embedding::DOUBLE[], x -> CAST(FLOOR(x * 1000.0) AS BIGINT))"
 
 
-@_q(
+@query(
     "e_gram_matrix",
     f"""
     WITH u AS (
@@ -175,7 +167,7 @@ def _semdedup_oracle(k_sql: str = str(_SD_K)) -> str:
     """
 
 
-@_q(
+@query(
     "e_semdedup",
     _semdedup_oracle(),
     doc="SemDeDup: Lloyd-cluster the embedding space, drop within-cluster "
@@ -201,7 +193,7 @@ def e_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SDS_TARGET = 16  # target vectors per cluster
 
 
-@_q(
+@query(
     "v_semdedup_scaled",
     _semdedup_oracle(
         f"(SELECT CAST(CEIL(COUNT(*) / {_SDS_TARGET}.0) AS BIGINT) FROM embeddings)"
@@ -367,7 +359,7 @@ def _semdedup_marks(e: DataFrame, n_clusters: int):
 # t_substring_dedup next to t_substring_spans): per-vector keep/remove
 # verdicts, the row set a corpus-assembly join actually filters on —
 # not just the per-cluster removal counts.
-@_q(
+@query(
     "v_semdedup_keep",
     f"""{_semdedup_cte()}
     SELECT af2.vec_id, af2.cluster,
@@ -473,7 +465,7 @@ def _mmr_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "v_mmr_rerank",
     _mmr_oracle(),
     doc="greedy MMR diversified top-5 over per-query top-20 retrieval "
@@ -574,7 +566,6 @@ def v_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doubles. The full (probe set, cell assignment, codes, ranking, ADC
 # distance) chain is hash-checked.
 _IVFPQ_K = 16  # PQ codebook size (anchors = residuals of corpus vecs 10..25)
-_IVFPQ_M = 8  # subvectors
 _IVFPQ_NPROBE = 3
 
 
@@ -649,7 +640,7 @@ def _ivfpq_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "v_ivfpq_knn",
     _ivfpq_oracle(),
     doc="IVF-PQ composite ANN: coarse L2 cell assignment + M=8 residual "
@@ -797,7 +788,7 @@ def v_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BK_K = 5
 
 
-@_q(
+@query(
     "v_knn_blocked",
     f"""
     WITH q AS (
@@ -929,7 +920,7 @@ def _hybrid_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "v_hybrid_search",
     _hybrid_oracle(),
     doc="two-stage retrieval: BM25 lexical recall (top-20 postings join) "
@@ -1011,7 +1002,7 @@ def v_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministic (DECIMAL L2 sums / grid-integer ADC), so the recall
 # numbers themselves hash-check. At 100 TB this is the query you run
 # after building the index to pick nprobe/K before trusting it.
-@_q(
+@query(
     "v_ivfpq_recall",
     f"""
     WITH ipq AS ({_ivfpq_oracle().replace(';', '')}
@@ -1125,7 +1116,7 @@ def _pca_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "v_pca_power",
     _pca_oracle(),
     doc="top principal direction via 3 relational power-iteration rounds "
@@ -1200,7 +1191,7 @@ def _bq_hamming(a0, a1, b0, b1):
     return F.bit_count(a0.bitwiseXOR(b0)) + F.bit_count(a1.bitwiseXOR(b1))
 
 
-@_q(
+@query(
     "v_bq_knn",
     f"""
     WITH q AS (
@@ -1283,7 +1274,7 @@ def v_bq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "v_bq_recall",
     f"""
     WITH q AS (
@@ -1364,7 +1355,7 @@ _IVF_INC_COS = (
 )
 
 
-@_q(
+@query(
     "v_ivf_incremental",
     f"""
     WITH base AS (
@@ -1480,7 +1471,7 @@ def _tr_prefix(col):
     return F.slice(to_double(col), 1, _TR_P)
 
 
-@_q(
+@query(
     "v_trunc_knn",
     f"""
     WITH q AS (
@@ -1558,7 +1549,7 @@ def v_trunc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "v_trunc_recall",
     f"""
     WITH q AS (
@@ -1647,7 +1638,7 @@ _NDCG_QUANT = (
 )
 
 
-@_q(
+@query(
     "v_ndcg_audit",
     f"""
     WITH q AS (
@@ -1839,7 +1830,7 @@ def _coded_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "v_label_noise",
     _label_noise_sql(
         "SELECT vec_id AS pid, label AS plabel, cc AS pc FROM c WHERE vec_id % 10 = 0"
@@ -1868,7 +1859,7 @@ def v_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PANEL_N = 64
 
 
-@_q(
+@query(
     "v_label_noise_panel",
     _label_noise_sql(
         f"""SELECT vec_id AS pid, label AS plabel, cc AS pc FROM c
@@ -1919,7 +1910,7 @@ def _db_cid_sql(cx: str, cy: str) -> str:
     return f"(({cx}) + {_DB_OFF}) * 1000 + (({cy}) + {_DB_OFF})"
 
 
-@_q(
+@query(
     "v_grid_dbscan",
     f"""
     WITH RECURSIVE p AS (
@@ -2169,7 +2160,7 @@ def _nprobe_sweep_oracle() -> str:
     )
 
 
-@_q(
+@query(
     "v_nprobe_sweep",
     _nprobe_sweep_oracle(),
     doc="IVF tuning curve: recall@5 vs nprobe in {1,2,4} against exact "
@@ -2287,7 +2278,7 @@ def _kc_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "v_kcenter_init",
     _kc_oracle(),
     doc=f"farthest-first k-center seeding (Gonzalez '85, K={_KC_K}): "
@@ -2402,7 +2393,7 @@ def _rrf_oracle() -> str:
     """
 
 
-@_q(
+@query(
     "v_rrf_fusion",
     _rrf_oracle(),
     doc="reciprocal-rank fusion of BM25 and vector top-10 lists "
@@ -2518,7 +2509,7 @@ def _rot_word_udfs():
     return rot_w0, rot_w1
 
 
-@_q(
+@query(
     "v_rotated_bq_recall",
     f"""
     WITH base AS (

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from daxos_spark.functions.hashing import (
     char_shingles,
     hamming32,
+    md5_lanes,
     md5_long,
-    md5_long_lane2,
     md5_long_sql,
     minhash_signature,
     simhash32,
@@ -32,24 +32,24 @@ def test_md5_long_matches_duckdb(spark):
 
 
 def test_md5_lane2_independent(spark):
-    """Lane 2 (hex 15-28) is the production second join key: it must
-    match an independent python computation of the same digest slice and
-    must differ from lane 1 (else the 112-bit claim collapses to 56)."""
+    """md5_lanes splits an md5 hex digest into hex chars 1-14 and 15-28:
+    both must match an independent python computation of the same digest
+    slices, lane 1 must be md5_long, and the lanes must differ (else the
+    112-bit key collapses to 56)."""
     import hashlib
 
     words = ["hello", "spark engine", "αβγ", "x"]
     df = spark.createDataFrame([(w,) for w in words], "s string")
+    h1, h2 = md5_lanes(F.md5(F.col("s")))
     got = {
-        r["s"]: (r["h1"], r["h2"])
+        r["s"]: (r["h1"], r["h2"], r["m"])
         for r in df.select(
-            "s",
-            md5_long(F.col("s")).alias("h1"),
-            md5_long_lane2(F.col("s")).alias("h2"),
+            "s", h1.alias("h1"), h2.alias("h2"), md5_long(F.col("s")).alias("m")
         ).collect()
     }
     for w in words:
         hx = hashlib.md5(w.encode()).hexdigest()
-        assert got[w][0] == int(hx[:14], 16), w
+        assert got[w][0] == int(hx[:14], 16) == got[w][2], w
         assert got[w][1] == int(hx[14:28], 16), w
         assert got[w][0] != got[w][1], w
 

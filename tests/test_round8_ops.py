@@ -1,6 +1,6 @@
 """Round-8 additions vs independent python oracles / paper invariants:
 DP Laplace release, NDCG@5 audit, Adamic-Adar link prediction, capped
-Kneser-Ney, two-lane dedup hashing. The duckdb hash gate proves
+Kneser-Ney, shingle-Jaccard dedup edges. The duckdb hash gate proves
 cross-engine agreement; these prove the SEMANTICS."""
 
 from __future__ import annotations
@@ -173,20 +173,47 @@ def test_kn_capped_equals_uncapped_when_cap_exceeds_vocab(spark):
     assert _KN_OOV not in vocab
 
 
-def test_two_lane_jaccard_pairs_identical_below_collision_horizon(spark):
+def test_jaccard_edge_pairs_match_raw_shingle_reference(spark):
+    """_jaccard_edge_pairs (112-bit hashed shingle keys) == a pure-python
+    Jaccard over the RAW shingle strings: same-source pairs with
+    |A∩B|/|A∪B| >= _JACC_THR after the global hot-shingle DF cap."""
+    import re
+    from collections import defaultdict
+    from itertools import combinations
+
     from daxos_spark.catalog import load_tables
-    from daxos_spark.plans.docpipe import _jaccard_edge_pairs
+    from daxos_spark.plans.docpipe import _JACC_THR, _MAX_SHINGLE_DF, _jaccard_edge_pairs
 
     d = load_tables(spark, SF_DIR)["documents"]
-    p1, caches1 = _jaccard_edge_pairs(d)
-    p2, caches2 = _jaccard_edge_pairs(d, two_lane=True)
-    one = {(r["da"], r["db"]) for r in p1.collect()}
-    two = {(r["da"], r["db"]) for r in p2.collect()}
-    for c in caches1 + caches2:
+    p, caches = _jaccard_edge_pairs(d)
+    got = {(r["da"], r["db"]) for r in p.collect()}
+    # the persisted stream carries both md5 lanes of each shingle
+    assert {"s", "s2"} <= set(caches[0].columns)
+    for c in caches:
         c.unpersist()
-    assert one == two and len(one) > 0
-    # the two-lane stream really carries the second lane
-    assert "s2" in caches2[0].columns and "s2" not in caches1[0].columns
+
+    sh, src = {}, {}
+    for r in d.select("doc_id", "source", "text").collect():
+        # Spark trim strips spaces only; Java's \s is [ \t\n\x0B\f\r]
+        tk = re.split(r"[ \t\n\x0b\f\r]+", r["text"].strip(" ").lower().strip(" "))
+        sh[r["doc_id"]] = {" ".join(tk[i : i + 3]) for i in range(max(len(tk) - 2, 1))}
+        src[r["doc_id"]] = r["source"]
+    df = defaultdict(int)
+    for s in sh.values():
+        for g in s:
+            df[g] += 1
+    sh = {k: {g for g in s if df[g] <= _MAX_SHINGLE_DF} for k, s in sh.items()}
+    cands = defaultdict(set)  # (source, shingle) -> docs
+    for k, s in sh.items():
+        for g in s:
+            cands[(src[k], g)].add(k)
+    pairs = {ab for docs in cands.values() for ab in combinations(sorted(docs), 2)}
+    want = {
+        (a, b)
+        for a, b in pairs
+        if len(sh[a] & sh[b]) / len(sh[a] | sh[b]) >= _JACC_THR
+    }
+    assert got == want and len(want) > 0
 
 
 def test_stratified_sample_matches_python_replay(spark):

@@ -1,44 +1,47 @@
-"""Round-9 additions: the composed two-lane refinery configuration.
-The duckdb hash gate proves cross-engine agreement; these prove the
-SEMANTICS (lane widening must be a pure key-width change below the
-collision horizon, and the second lane must really be there)."""
+"""Round-9 additions vs independent references: the refinery funnel
+against its raw-string duckdb oracle, the two-lane K-gram key against a
+hashlib replay, and the other round-9 ops against python replays."""
 
 from __future__ import annotations
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_refinery_lane2_identical_below_collision_horizon(spark):
-    """t_refinery_lane2 == t_refinery_linear row-for-row at test
-    cardinalities: the 112-bit ExactSubstr keys change NOTHING except
-    collision resistance (no 56-bit gram collisions exist here, so any
-    funnel-count difference would mean the second lane altered the
-    repeat-detection semantics)."""
-    from daxos_spark.plans.textpipe import t_refinery_lane2, t_refinery_linear
+def test_refinery_linear_matches_duckdb_oracle(spark):
+    """t_refinery_linear (112-bit ExactSubstr K-gram keys) == its duckdb
+    oracle, which joins the raw K-gram strings, under the gate's
+    order-insensitive frame digest; and the funnel is monotone."""
+    import sys
+    from pathlib import Path
 
-    lin = {
-        (r["stage"], r["stage_name"], r["n_docs"], r["n_tokens"])
-        for r in t_refinery_linear(spark, SF_DIR).collect()
-    }
-    l2 = {
-        (r["stage"], r["stage_name"], r["n_docs"], r["n_tokens"])
-        for r in t_refinery_lane2(spark, SF_DIR).collect()
-    }
-    assert lin == l2
-    assert len(lin) == 5
+    import duckdb
+
+    from daxos_spark.catalog import TABLES
+    from daxos_spark.plans import get_specs
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from check_oracle import frame_digest
+
+    spec = get_specs()["t_refinery_linear"]
+    got = spec.spark(spark, SF_DIR).toPandas()
+    spark.catalog.clearCache()
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+    want = con.execute(spec.oracle).fetchdf()
+    con.close()
+    assert frame_digest(got) == frame_digest(want)
+    assert len(got) == 5
     # a real funnel: monotone non-increasing survivor counts by stage
-    by_stage = sorted(lin)
-    docs = [t[2] for t in by_stage]
+    docs = list(got.sort_values("stage")["n_docs"])
     assert docs == sorted(docs, reverse=True)
 
 
-def test_two_lane_position_stream_carries_both_md5_lanes(spark):
-    """The two lanes must be the two 56-bit halves of ONE md5 digest of
-    the K-gram text (the _jaccard_edge_pairs convention) — verified
-    against a python replay on a tiny frame."""
+def test_position_stream_carries_both_md5_lanes(spark):
+    """The K-gram key (h, h2) must be the two 56-bit halves of ONE md5
+    digest of the K-gram text (the _jaccard_edge_pairs convention) —
+    verified against a python replay on a tiny frame."""
     import hashlib
-
-    from pyspark.sql import functions as F
 
     from daxos_spark.plans.textpipe import _SS_K, _ss_position_stream
 
@@ -46,21 +49,15 @@ def test_two_lane_position_stream_carries_both_md5_lanes(spark):
     d = spark.createDataFrame(
         [(1, " ".join(toks))], "doc_id int, text string"
     )
-    _t, pos1 = _ss_position_stream(d)
-    _t, pos2 = _ss_position_stream(d, two_lane=True)
-    assert "h2" not in pos1.columns
-    rows = {r["i"]: (r["h"], r["h2"]) for r in pos2.collect()}
+    _t, pos = _ss_position_stream(d)
+    rows = {r["i"]: (r["h"], r["h2"]) for r in pos.collect()}
+    pos.unpersist()
     assert len(rows) == 3  # positions 1..n-K+1
     for i, (h, h2) in rows.items():
         gram = " ".join(toks[i - 1 : i - 1 + _SS_K])
         hx = hashlib.md5(gram.encode()).hexdigest()
         assert h == int(hx[:14], 16)
         assert h2 == int(hx[14:28], 16)
-    # single-lane h is the same first lane (md5_long convention)
-    one = {r["i"]: r["h"] for r in pos1.collect()}
-    pos1.unpersist()
-    pos2.unpersist()
-    assert one == {i: h for i, (h, _h2) in rows.items()}
 
 
 def test_shard_manifest_matches_python_replay(spark):

@@ -109,31 +109,3 @@ def test_jsonl_roundtrip(spark, tmp_path):
     want = {r["doc_id"]: r["text"] for r in d.collect()}
     assert got == want
 
-
-def test_plink_python_datasource(spark, plink_raw_path):
-    """Registered spark.read.format('plink_raw') source: same rows as
-    the production CSV-scan ingest, correct text-split semantics across
-    multiple byte-range partitions."""
-    from daxos_spark.sources.plink_datasource import register_plink_source, snp_names
-
-    path, X, y, snps = plink_raw_path
-    register_plink_source(spark)
-    # split_bytes tiny → many partitions; split ownership must not drop
-    # or double-count boundary lines
-    df = (
-        spark.read.format("plink_raw")
-        .option("path", path)
-        .option("split_bytes", 512)
-        .load()
-    )
-    assert df.rdd.getNumPartitions() > 1
-    rows = df.collect()
-    assert len(rows) == len(X)
-    assert snp_names(path) == snps
-
-    by_iid = {r["IID"]: r for r in rows}
-    assert set(by_iid) == {f"I{i}" for i in range(len(X))}
-    for i in (0, 7, len(X) - 1):
-        r = by_iid[f"I{i}"]
-        assert r["features"] == [float(v) for v in X[i]]
-        assert r["PHENOTYPE"] == float(y[i])  # 1/2 recoded to 0/1

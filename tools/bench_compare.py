@@ -4,10 +4,6 @@ Diffs two bench.py JSON outputs (BENCH_r{N}.json vs r{N-1}, or any two
 files/paths) and fails on per-query regressions beyond a threshold, so a
 slowdown is caught locally before the external driver records it.
 
-Renames are tolerated: round 3 moved the SURVEY-core queries into the
-a1_/a2_ namespace (daxos_spark/plans/registry.py::RENAMES), so the old
-name is consulted when the new one is absent from the older run.
-
 Usage:
     python tools/bench_compare.py NEW.json OLD.json [--threshold 1.5]
 
@@ -20,9 +16,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 NOISE_FLOOR_SEC = 0.3
 
@@ -126,12 +119,6 @@ def main() -> int:
             )
         new_q, old_q = new.get("queries", {}), old.get("queries", {})
 
-    try:
-        from daxos_spark.plans.registry import RENAMES
-    except Exception:  # pragma: no cover — tool must work standalone
-        RENAMES = {}
-    back = {v: k for k, v in RENAMES.items()}
-
     # Round-10 (VERDICT-r9 ask #3): when both runs carry the
     # data-independent calibration workload, its ratio IS the box/JVM
     # shift (the workload never changes) — divide per-query ratios by
@@ -152,7 +139,7 @@ def main() -> int:
     failures: list[str] = []
     checked = 0
     for name, t_new in sorted(new_q.items()):
-        t_old = old_q.get(name, old_q.get(back.get(name, name)))
+        t_old = old_q.get(name)
         if t_old is None:
             print(f"  new query (no baseline): {name} {t_new:.2f}s")
             continue
@@ -171,7 +158,7 @@ def main() -> int:
         suite_new, suite_old = new.get("queries", {}), old.get("queries", {})
         drifted = []
         for name, t_new in sorted(suite_new.items()):
-            t_old = suite_old.get(name, suite_old.get(back.get(name, name)))
+            t_old = suite_old.get(name)
             if t_old is None or (t_new <= NOISE_FLOOR_SEC and t_old <= NOISE_FLOOR_SEC):
                 continue
             if t_old > 0 and t_new / t_old > args.threshold:
@@ -195,9 +182,7 @@ def main() -> int:
             f"{q}: NEW PINNED ERROR {new.get('pinned_errors', {})[q][:120]}"
         )
 
-    dropped = [
-        n for n in old_q if n not in new_q and RENAMES.get(n, n) not in new_q
-    ]
+    dropped = [n for n in old_q if n not in new_q]
     if dropped:
         print(f"  note: {len(dropped)} queries in old run absent from new: {dropped}")
 

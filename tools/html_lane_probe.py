@@ -20,7 +20,8 @@ live 10× corpus, where the duckdb oracle hits the box memory ceiling:
 and requires, per text-funnel stage 2..5 (= composed stages 3..6):
 survivor COUNT, token mass, and the order-independent survivor-SET
 digest (Σ md5_long('rl#'||doc_id) as DECIMAL(38,0) — the
-refinery_lane_probe construction) to be identical, plus the composed
+prefix_digest_probe construction: exact, associative, no driver collect
+of the survivor sets) to be identical, plus the composed
 6-row funnel tail (rows 3-6) to row-match lane B's registered 5-row
 funnel (rows 2-5).
 
@@ -46,7 +47,27 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-from tools.refinery_lane_probe import stage_summary
+
+def stage_summary(verdicts):
+    """One row: per stage s2..s5 — survivor count, token mass, and the
+    order-independent survivor-set digest. All exact integers/decimals."""
+    from daxos_spark.functions.hashing import md5_long
+
+    h = md5_long(F.concat(F.lit("rl#"), F.col("doc_id").cast("string"))).cast(
+        "decimal(38,0)"
+    )
+    s2 = F.col("p_gopher")
+    s3 = s2 * F.col("p_ppl")
+    s4 = s3 * F.col("p_sub")
+    s5 = s4 * F.col("p_sem")
+    aggs = []
+    for i, s in ((2, s2), (3, s3), (4, s4), (5, s5)):
+        aggs += [
+            F.sum(s).cast("bigint").alias(f"n{i}"),
+            F.sum(s * F.col("n_tok")).cast("bigint").alias(f"t{i}"),
+            F.sum(h * s).alias(f"d{i}"),
+        ]
+    return verdicts.agg(*aggs).first()
 
 
 def main() -> int:

@@ -47,7 +47,7 @@ LANES = [
     "d_simhash_neardup",
     "t_dedup_agreement",
     "t_containment_dedup",
-    "t_dedup_clusters_lane2",
+    "d_dedup_clusters",
 ]
 
 

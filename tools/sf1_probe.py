@@ -117,7 +117,7 @@ PROBES = [
     "q_link_prediction",
     "q_dp_histogram",
     "v_ndcg_audit",
-    "t_dedup_clusters_lane2",
+    "d_dedup_clusters",
     "t_stratified_sample",
     # round-9: the new dedup-blocking lanes + the Bellman-Ford graph op
     "d_simhash_neardup",
@@ -176,7 +176,7 @@ def synthesize(
       feature (word count, mean word length, alpha ratio, stopword
       hits, repetition) is replica-invariant, so the quality funnel
       stays LIVE at 10× — survivor mass scales with the corpus.
-      Used by tools/refinery_lane_probe.py (tmp_sf1_live).
+      Used by tools/html_lane_probe.py (tmp_sf1_live).
 
     ``n_rep`` overrides the module-level N_REP replica count.
     """
